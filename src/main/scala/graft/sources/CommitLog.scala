@@ -16,11 +16,10 @@ import org.apache.spark.sql.functions._
   *   - Data files for a candidate version land under `data/v<N>-<token>/`
   *     — INVISIBLE to readers until committed (readers only follow
   *     manifests; orphaned staging dirs are deletable garbage).
-  *   - A version COMMITS by atomically creating `_log/<N>` via
-  *     `FileSystem.create(path, overwrite = false)` — exactly one of two
-  *     concurrent writers racing for version N wins; the loser sees
-  *     FileAlreadyExists, cleans its staging dir, re-reads the log, and
-  *     retries at N+1 (optimistic concurrency, bounded retries).
+  *   - A version COMMITS by atomically creating `_log/<N>` through the
+  *     shared optimistic loop [[Txn]] — exactly one of two concurrent
+  *     writers racing for version N wins; the loser cleans its staging
+  *     dir, re-reads the log, and retries at N+1 (bounded retries).
   *   - The manifest's ONLY content is the staging dir name: the commit
   *     point is one atomic metadata operation, never a data copy, so a
   *     reader at any instant sees a prefix of committed versions and no
@@ -56,44 +55,60 @@ object CommitLog {
   /** Highest committed version, 0 if none. A checkpoint (see [[expire]])
     * counts: after full compaction the table's version floor must still
     * advance new commits past it. */
-  def latestVersion(spark: SparkSession, table: String): Int = {
-    val fs = hadoopFs(spark, table)
+  def latestVersion(spark: SparkSession, table: String): Int =
+    latestVersion(hadoopFs(spark, table), table)
+
+  private def latestVersion(fs: FileSystem, table: String): Int = {
     val names = listLog(fs, table)
     (manifestVersions(names) ++ checkpointVersions(names)).foldLeft(0)(math.max)
+  }
+
+  /** The snapshot log for [[Txn]]: version N is `_log/<N>`, its content
+    * the committed staging dir's name. */
+  private class Log(fs: FileSystem, table: String)
+      extends Txn.Log[String](fs, table) {
+    def head(): Long = latestVersion(fs, table)
+    def versionFile(v: Long): Path = new Path(logDir(table), v.toString)
+    def encode(v: Long, stagedDir: String): Array[Byte] = {
+      fs.mkdirs(logDir(table))
+      stagedDir.getBytes(StandardCharsets.UTF_8)
+    }
+  }
+
+  /** The checkpoint log for [[expire]]: version N is `_log/<N>.ckpt`. Its
+    * head is the version just below the retention cut (latest −
+    * keepLast), so the claimed version IS the cut — a concurrent expire
+    * that published the same cut makes the retry see it as the floor. */
+  private class CheckpointLog(fs: FileSystem, table: String, keepLast: Int)
+      extends Log(fs, table) {
+    override def head(): Long = latestVersion(fs, table) - keepLast - 1
+    override def versionFile(v: Long): Path =
+      new Path(logDir(table), s"$v.ckpt")
   }
 
   /** Attempt to commit `stagedDir` as exactly `version`. Returns true iff
     * THIS writer created the manifest — the atomic-create race arbiter. */
   private[graft] def tryCommit(spark: SparkSession, table: String,
-      version: Int, stagedDir: String): Boolean = {
-    val fs = hadoopFs(spark, table)
-    fs.mkdirs(logDir(table))
-    val manifest = new Path(logDir(table), version.toString)
-    AtomicCreate.create(fs, manifest,
-      stagedDir.getBytes(StandardCharsets.UTF_8))
-  }
+      version: Int, stagedDir: String): Boolean =
+    Txn.put(new Log(hadoopFs(spark, table), table), version, stagedDir)
 
   /** Stage `batch` (schema: key, payload columns) and commit it as the next
     * version, retrying past concurrent winners. Returns the version won. */
-  def commit(spark: SparkSession, table: String, batch: DataFrame,
-      maxRetries: Int = 10): Int = {
-    val fs = hadoopFs(spark, table)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = latestVersion(spark, table) + 1
+  def commit(spark: SparkSession, table: String, batch: DataFrame): Int =
+    commitTagged(spark, table, batch, "-")
+
+  /** Each attempt stages `batch` under `data/v<N><tag><token>` for the
+    * head's next version N; a lost race deletes the staging dir and
+    * retries against the advanced log (appends commute). */
+  private def commitTagged(spark: SparkSession, table: String,
+      batch: DataFrame, tag: String): Int =
+    Txn.commit(new Log(hadoopFs(spark, table), table), "commit") { head =>
+      val v = head.toInt + 1
       val token = java.util.UUID.randomUUID().toString.take(8)
-      val staged = s"data/v$v-$token"
+      val staged = s"data/v$v$tag$token"
       batch.write.mode("errorifexists").parquet(s"$table/$staged")
-      if (tryCommit(spark, table, v, staged)) return v
-      // lost: another writer owns v — remove the orphaned staging dir and
-      // retry against the advanced log
-      fs.delete(new Path(table, staged), true)
-      attempt += 1
+      Txn.Put(staged, v, Seq(new Path(table, staged)))
     }
-    throw new IllegalStateException(
-      s"commit lost $maxRetries races on $table; raise maxRetries under " +
-        "heavier writer contention")
-  }
 
   /** Snapshot read: union every committed manifest ≤ `asOf` (default: all),
     * tag rows with their commit version, keep each key's latest row. Only
@@ -151,10 +166,10 @@ object CommitLog {
     * the reprocessing horizon or a replay older than the floor would
     * re-append (document, don't guess: keepLast ≥ max replayable lag). */
   def commitIdempotent(spark: SparkSession, table: String, batch: DataFrame,
-      batchId: Long, maxRetries: Int = 10): Int = {
+      batchId: Long): Int = {
     val fs = hadoopFs(spark, table)
     val marker = s"-b$batchId-"
-    val existing = listLog(fs, table)
+    listLog(fs, table)
       .flatMap(n => scala.util.Try(n.toInt).toOption)
       .find { v =>
         val staged =
@@ -162,22 +177,7 @@ object CommitLog {
             StandardCharsets.UTF_8)
         staged.contains(marker)
       }
-    existing match {
-      case Some(v) => v
-      case None =>
-        var attempt = 0
-        while (attempt < maxRetries) {
-          val v = latestVersion(spark, table) + 1
-          val token = java.util.UUID.randomUUID().toString.take(8)
-          val staged = s"data/v$v${marker}$token"
-          batch.write.mode("errorifexists").parquet(s"$table/$staged")
-          if (tryCommit(spark, table, v, staged)) return v
-          fs.delete(new Path(table, staged), true)
-          attempt += 1
-        }
-        throw new IllegalStateException(
-          s"idempotent commit lost $maxRetries races on $table")
-    }
+      .getOrElse(commitTagged(spark, table, batch, marker))
   }
 
   /** X36c: retention (vacuum + checkpoint) — compact every version ≤
@@ -199,25 +199,22 @@ object CommitLog {
       keepLast: Int): Int = {
     require(keepLast >= 0, "keepLast must be >= 0")
     val fs = hadoopFs(spark, table)
-    val names = listLog(fs, table)
-    val latest =
-      (manifestVersions(names) ++ checkpointVersions(names)).foldLeft(0)(math.max)
-    val oldFloor = checkpointVersions(names).foldLeft(0)(math.max)
-    val cut = latest - keepLast
-    if (cut < 1 || cut <= oldFloor) return 0
-    val compacted = read(spark, table, keyCol, asOf = cut)
-      .withColumnRenamed("version", "__v")
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val staged = s"data/ckpt-v$cut-$token"
-    compacted.write.mode("errorifexists").parquet(s"$table/$staged")
-    val ckFile = new Path(logDir(table), s"$cut.ckpt")
-    val won =
-      AtomicCreate.create(fs, ckFile,
-        staged.getBytes(StandardCharsets.UTF_8)) // concurrent expire arbiter
-    if (!won) {
-      fs.delete(new Path(table, staged), true)
-      return 0
+    val cut = Txn.commit(new CheckpointLog(fs, table, keepLast), "expire") {
+      head =>
+        val cut = head.toInt + 1
+        val oldFloor =
+          checkpointVersions(listLog(fs, table)).foldLeft(0)(math.max)
+        if (cut < 1 || cut <= oldFloor) Txn.Done(0)
+        else {
+          val compacted = read(spark, table, keyCol, asOf = cut)
+            .withColumnRenamed("version", "__v")
+          val token = java.util.UUID.randomUUID().toString.take(8)
+          val staged = s"data/ckpt-v$cut-$token"
+          compacted.write.mode("errorifexists").parquet(s"$table/$staged")
+          Txn.Put(staged, cut, Seq(new Path(table, staged)))
+        }
     }
+    if (cut == 0) return 0
     // cleanup: superseded manifests + their staging dirs, and older ckpts
     listLog(fs, table).foreach { n =>
       val mv = scala.util.Try(n.toInt).toOption

@@ -23,8 +23,9 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   *     `metaData` (id, parquet format, schemaString in Spark's StructType
   *     JSON — which IS Delta's schemaString encoding), `add`, `remove`;
   *   - versions are `_delta_log/%020d.json`, claimed by ATOMIC CREATE
-  *     (the same optimistic arbiter as [[CommitLog.tryCommit]]; Delta on
-  *     HDFS-class stores uses exactly this primitive);
+  *     through [[Txn]], the optimistic-commit loop shared with
+  *     [[CommitLog]] and [[IcebergLite]] (Delta on HDFS-class stores uses
+  *     exactly this primitive);
   *   - also emitted: `commitInfo` (provenance), `txn` (SetTransaction —
   *     the exactly-once streaming ledger, preserved across checkpoints),
   *     partitioned tables (partitionValues in adds, partitionColumns in
@@ -75,23 +76,48 @@ object DeltaLite {
 
   /** Highest committed version, -1 for a table with no log yet (Delta
     * numbers its first commit 0). */
-  def latestVersion(spark: SparkSession, table: String): Long = {
-    val fs = hadoopFs(spark, table)
+  def latestVersion(spark: SparkSession, table: String): Long =
+    latestVersion(hadoopFs(spark, table), table)
+
+  private def latestVersion(fs: FileSystem, table: String): Long = {
     val dir = logDir(table)
     if (!fs.exists(dir)) -1L
     else fs.listStatus(dir).flatMap(s => versionOf(s.getPath.getName))
       .foldLeft(-1L)(math.max)
   }
 
+  /** The Delta log for [[Txn]]: version N is `%020d.json`, one action per
+    * line, stamped with its in-commit timestamp when enabled. */
+  private[sources] class Log(fs: FileSystem, table: String)
+      extends Txn.Log[Seq[String]](fs, table) {
+    def head(): Long = latestVersion(fs, table)
+    def versionFile(v: Long): Path = DeltaLite.versionFile(table, v)
+    def encode(v: Long, actionLines: Seq[String]): Array[Byte] = {
+      fs.mkdirs(logDir(table))
+      val lines = stampInCommitTimestamp(fs, table, v, actionLines)
+      (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8)
+    }
+  }
+
+  private[sources] def txnLog(spark: SparkSession, table: String): Log =
+    new Log(hadoopFs(spark, table), table)
+
   /** Atomic-create race arbiter: true iff THIS writer created version
     * file `v` with the given action lines. */
   private[graft] def tryCommit(fs: FileSystem, table: String, v: Long,
-      actionLines: Seq[String]): Boolean = {
-    fs.mkdirs(logDir(table))
-    val lines = stampInCommitTimestamp(fs, table, v, actionLines)
-    AtomicCreate.create(fs, versionFile(table, v),
-      (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-  }
+      actionLines: Seq[String]): Boolean =
+    Txn.put(new Log(fs, table), v, actionLines)
+
+  /** Commit `actionLines` as the version after `pinned`, the snapshot the
+    * operation was built on — any commit after `pinned` conflicts.
+    * `staged` are the operation's commit-private dirs. Returns the
+    * committed version. */
+  private def commitPinned(spark: SparkSession, table: String, pinned: Long,
+      operation: String, actionLines: Seq[String],
+      staged: String*): Long =
+    Txn.commit(txnLog(spark, table), operation, Txn.PinnedAt(pinned)) { _ =>
+      Txn.Put(actionLines, pinned + 1, staged.map(new Path(table, _)))
+    }
 
   /** The inCommitTimestamp of a commit file's leading commitInfo, None
     * when the commit predates enablement (or has no commitInfo first). */
@@ -252,13 +278,11 @@ object DeltaLite {
     * `remove` actions for every file live at the previous version. Returns
     * the committed version. Retries past concurrent winners — the staged
     * directory is commit-private, so a lost race leaves no visible state
-    * (the orphan is deleted before retry, the [[CommitLog.commit]]
-    * discipline). */
+    * (the orphan is deleted before retry, the [[Txn]] discipline). */
   def write(spark: SparkSession, df: DataFrame, table: String,
-      overwrite: Boolean = false, maxRetries: Int = 10,
-      collectStats: Boolean = false): Long =
+      overwrite: Boolean = false, collectStats: Boolean = false): Long =
     writeTagged(spark, df, table, overwrite, tag = "-",
-      maxRetries = maxRetries, collectStats = collectStats)
+      collectStats = collectStats)
 
   /** CREATE TABLE — a v0 METADATA-ONLY commit (protocol + metaData, zero
     * add actions): the empty table exists, carries its schema and
@@ -271,17 +295,14 @@ object DeltaLite {
     * write; no data plane. */
   def createTable(spark: SparkSession, table: String, schema: StructType,
       partitionColumns: Seq[String] = Seq.empty): Long = {
-    val fs = hadoopFs(spark, table)
-    require(latestVersion(spark, table) < 0,
+    val latest = latestVersion(spark, table)
+    require(latest < 0,
       s"$table already has a Delta log — CREATE TABLE refuses to clobber")
     partitionColumns.foreach(c => require(schema.fieldNames.contains(c),
       s"partition column $c absent from the declared schema"))
-    if (!tryCommit(fs, table, 0L, Seq(
-        commitInfoLine("CREATE TABLE"), protocolLine,
-        metaDataLine(schema, partitionColumns = partitionColumns))))
-      throw new IllegalStateException(
-        s"CREATE TABLE lost the commit race on $table")
-    0L
+    commitPinned(spark, table, latest, "CREATE TABLE", Seq(
+      commitInfoLine("CREATE TABLE"), protocolLine,
+      metaDataLine(schema, partitionColumns = partitionColumns)))
   }
 
   private def readLogText(fs: FileSystem, p: Path): String = {
@@ -810,12 +831,8 @@ object DeltaLite {
         val upgraded = Protocol(3, 7,
           (cur.readerFeatures :+ "v2Checkpoint").distinct,
           (cur.writerFeatures :+ "v2Checkpoint").distinct)
-        val uv = latest0 + 1
-        if (!tryCommit(fs, table, uv, Seq(
-            commitInfoLine("UPGRADE PROTOCOL"), protocolLineOf(upgraded))))
-          throw new IllegalStateException(
-            s"v2Checkpoint protocol upgrade lost the race on $table")
-        uv
+        commitPinned(spark, table, latest0, "UPGRADE PROTOCOL", Seq(
+          commitInfoLine("UPGRADE PROTOCOL"), protocolLineOf(upgraded)))
       }
     val snap = snapshot(spark, table, v)
     val (tableId, schemaJson) = snap.meta.getOrElse(
@@ -1110,9 +1127,8 @@ object DeltaLite {
       addLine(s"$staged/${p.getPath.getName}", p.getLen, p.getModificationTime,
         statsByFile.get(p.getPath.getName), dataChange = false))
     val removes = before.files.map(removeLine(_, dataChange = false))
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("OPTIMIZE") +: (removes ++ adds)))
-      throw new IllegalStateException(s"optimize lost the commit race on $table")
+    commitPinned(spark, table, latest, "OPTIMIZE",
+      commitInfoLine("OPTIMIZE") +: (removes ++ adds), staged)
     (v, before.files.size.toLong, parts.length.toLong)
   }
 
@@ -1183,9 +1199,8 @@ object DeltaLite {
     }
     if (removes.isEmpty)
       return (latest, before.files.size.toLong, before.files.size.toLong)
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("OPTIMIZE") +: (removes.toSeq ++ adds.toSeq)))
-      throw new IllegalStateException(s"optimize lost the commit race on $table")
+    commitPinned(spark, table, latest, "OPTIMIZE",
+      commitInfoLine("OPTIMIZE") +: (removes.toSeq ++ adds.toSeq), staged)
     (v, before.files.size.toLong, filesAfter)
   }
 
@@ -1278,9 +1293,8 @@ object DeltaLite {
       addLine(s"$staged/${p.getPath.getName}", p.getLen, p.getModificationTime,
         statsByFile.get(p.getPath.getName), dataChange = false))
     val removes = before.files.map(removeLine(_, dataChange = false))
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("OPTIMIZE") +: (removes ++ adds)))
-      throw new IllegalStateException(s"optimize lost the commit race on $table")
+    commitPinned(spark, table, latest, "OPTIMIZE",
+      commitInfoLine("OPTIMIZE") +: (removes ++ adds), staged)
     (v, before.files.size.toLong, parts.length.toLong)
   }
 
@@ -1298,7 +1312,7 @@ object DeltaLite {
     * collection composes as in [[write]]. Returns the version. */
   def writePartitioned(spark: SparkSession, dfIn: DataFrame, table: String,
       partCol: String, collectStats: Boolean = false,
-      maxRetries: Int = 10, tag: String = "-p-",
+      tag: String = "-p-",
       txn: Option[(String, Long)] = None,
       overwrite: Boolean = false,
       replaceValue: Option[String] = None): Long = {
@@ -1314,9 +1328,9 @@ object DeltaLite {
     enforceConstraints(spark, table, df)
     require(df.schema.fieldNames.contains(partCol),
       s"partition column $partCol absent from schema")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = latestVersion(spark, table) + 1
+    val op = if (overwrite || replaceValue.isDefined) "OVERWRITE" else "WRITE"
+    Txn.commit(new Log(fs, table), op) { head =>
+      val v = head + 1
       if (v > 0) {
         val prior = snapshot(spark, table, v - 1)
         // EVERY live file must carry partitionValues for partCol — a
@@ -1432,13 +1446,9 @@ object DeltaLite {
             prior.pvals.get(f).exists(_.get(partCol).contains(rv)))
             .map(removeLine(_))
         }
-      val op = if (overwrite || replaceValue.isDefined) "OVERWRITE" else "WRITE"
-      if (tryCommit(fs, table, v,
-          commitInfoLine(op) +: (header ++ txns ++ removes ++ adds))) return v
-      fs.delete(new Path(table, staged), true)
-      attempt += 1
+      Txn.Put(commitInfoLine(op) +: (header ++ txns ++ removes ++ adds), v,
+        Seq(new Path(table, staged)))
     }
-    throw new IllegalStateException(s"commit lost $maxRetries races on $table")
   }
 
   /** Exactly-once micro-batch commit into a PARTITIONED table — the
@@ -1448,25 +1458,10 @@ object DeltaLite {
     * contract — survives checkpoint+expireLog), with the `-b<id>-` staged
     * path marker for exact-version answers while the JSON commit lives. */
   def commitIdempotentPartitioned(spark: SparkSession, df: DataFrame,
-      table: String, partCol: String, batchId: Long): Long = {
-    val fs = hadoopFs(spark, table)
-    val marker = s"-b$batchId-"
-    val latest = latestVersion(spark, table)
-    if (latest >= 0) {
-      val snap = snapshot(spark, table, latest)
-      if (snap.txns.get(TxnAppId).exists(_ >= batchId)) {
-        var v = 0L
-        while (v <= latest) {
-          val p = versionFile(table, v)
-          if (fs.exists(p) && readLogText(fs, p).contains(marker)) return v
-          v += 1
-        }
-        return math.max(lastCheckpointVersion(spark, table), 0L)
-      }
-    }
-    writePartitioned(spark, df, table, partCol, tag = marker,
-      txn = Some((TxnAppId, batchId)))
-  }
+      table: String, partCol: String, batchId: Long): Long =
+    appliedBatch(spark, table, batchId).getOrElse(
+      writePartitioned(spark, df, table, partCol, tag = s"-b$batchId-",
+        txn = Some((TxnAppId, batchId))))
 
   /** Partition pruning off the log alone: the current snapshot's files
     * whose recorded partitionValues for `partCol` fall in `wanted` — no
@@ -1514,31 +1509,34 @@ object DeltaLite {
   private[graft] val TxnAppId = "graft-stream"
 
   def commitIdempotent(spark: SparkSession, df: DataFrame, table: String,
-      batchId: Long): Long = {
+      batchId: Long): Long =
+    appliedBatch(spark, table, batchId).getOrElse(
+      writeTagged(spark, df, table, overwrite = false, tag = s"-b$batchId-",
+        txn = Some((TxnAppId, batchId))))
+
+  /** The version carrying micro-batch `batchId` when the table already
+    * applied it. The authoritative ledger is the snapshot's
+    * SetTransaction state: it survives checkpoint+expireLog (checkpoints
+    * persist txn rows) and overwrites of the batch's files — unlike the
+    * `-b<id>-` path marker, which dies with its JSON commit. Micro-batch
+    * ids are monotone (the Structured Streaming contract), so
+    * max(version) decides. */
+  private def appliedBatch(spark: SparkSession, table: String,
+      batchId: Long): Option[Long] = {
     val fs = hadoopFs(spark, table)
     val marker = s"-b$batchId-"
     val latest = latestVersion(spark, table)
-    if (latest >= 0) {
-      // authoritative ledger: the snapshot's SetTransaction state. It
-      // survives checkpoint+expireLog (checkpoints persist txn rows) and
-      // overwrites of the batch's files — unlike the path marker, which
-      // dies with its JSON commit. Micro-batch ids are monotone (the
-      // Structured Streaming contract), so max(version) decides.
-      val snap = snapshot(spark, table, latest)
-      if (snap.txns.get(TxnAppId).exists(_ >= batchId)) {
-        // exact original version when its JSON commit still exists …
-        var v = 0L
-        while (v <= latest) {
-          val p = versionFile(table, v)
-          if (fs.exists(p) && readLogText(fs, p).contains(marker)) return v
-          v += 1
-        }
-        // … otherwise it was subsumed by the checkpoint: report that
-        return math.max(lastCheckpointVersion(spark, table), 0L)
+    if (latest < 0 ||
+        !snapshot(spark, table, latest).txns.get(TxnAppId).exists(_ >= batchId))
+      None
+    else Some(
+      // exact original version when its JSON commit still exists …
+      (0L to latest).find { v =>
+        val p = versionFile(table, v)
+        fs.exists(p) && readLogText(fs, p).contains(marker)
       }
-    }
-    writeTagged(spark, df, table, overwrite = false, tag = marker,
-      txn = Some((TxnAppId, batchId)))
+      // … otherwise it was subsumed by the checkpoint: report that
+      .getOrElse(math.max(lastCheckpointVersion(spark, table), 0L)))
   }
 
   // ----------------------------------------------------------------------
@@ -1670,15 +1668,14 @@ object DeltaLite {
     * binds the parquet field id (spec pins id-resolution by reading
     * under deliberately WRONG physical names with matching ids). */
   def writeColumnMapped(spark: SparkSession, df: DataFrame, table: String,
-      maxRetries: Int = 10, mode: String = "name"): Long = {
+      mode: String = "name"): Long = {
     import org.apache.spark.sql.functions.col
     require(mode == "name" || mode == "id",
       s"unknown column-mapping mode '$mode' (name | id)")
     val fs = hadoopFs(spark, table)
     enforceConstraints(spark, table, df)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = latestVersion(spark, table) + 1
+    Txn.commit(new Log(fs, table), "WRITE") { head =>
+      val v = head + 1
       val (header, mapped) =
         if (v == 0) {
           val m = StructType(cmAssign(df.schema.fields.toSeq, 1L))
@@ -1733,12 +1730,9 @@ object DeltaLite {
         .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
       val adds = parts.toSeq.map(p =>
         addLine(s"$staged/${p.getPath.getName}", p.getLen, p.getModificationTime))
-      if (tryCommit(fs, table, v,
-          commitInfoLine("WRITE") +: (header ++ adds))) return v
-      fs.delete(new Path(table, staged), true)
-      attempt += 1
+      Txn.Put(commitInfoLine("WRITE") +: (header ++ adds), v,
+        Seq(new Path(table, staged)))
     }
-    throw new IllegalStateException(s"commit lost $maxRetries races on $table")
   }
 
   /** METADATA-ONLY column rename — the reason name mapping exists: the
@@ -1747,10 +1741,9 @@ object DeltaLite {
     * time-travel under their own names. Returns the commit version. */
   def renameColumn(spark: SparkSession, table: String, oldName: String,
       newName: String): Long = {
-    val fs = hadoopFs(spark, table)
-    val v = latestVersion(spark, table) + 1
-    require(v > 0, s"$table has no Delta log")
-    val snapR = snapshot(spark, table, v - 1)
+    val latest = latestVersion(spark, table)
+    require(latest >= 0, s"$table has no Delta log")
+    val snapR = snapshot(spark, table, latest)
     val (id, _) = snapR.meta.getOrElse(
       throw new IllegalArgumentException(s"no metaData in $table log"))
     val schema = tableSchema(spark, table)
@@ -1761,12 +1754,11 @@ object DeltaLite {
       s"column $newName already exists in $table")
     val renamed = StructType(schema.fields.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
-    if (!tryCommit(fs, table, v, Seq(commitInfoLine("RENAME COLUMN"),
-        metaDataLine(renamed, id,
-          configuration = cmConfiguration(renamed, cmMode(snapR.config),
-            floor = cmMaxId(schema, snapR.config))))))
-      throw new IllegalStateException(s"rename lost the commit race on $table")
-    v
+    commitPinned(spark, table, latest, "RENAME COLUMN", Seq(
+      commitInfoLine("RENAME COLUMN"),
+      metaDataLine(renamed, id,
+        configuration = cmConfiguration(renamed, cmMode(snapR.config),
+          floor = cmMaxId(schema, snapR.config)))))
   }
 
   /** METADATA-ONLY column drop (column mapping's second superpower): the
@@ -1774,10 +1766,9 @@ object DeltaLite {
     * data file, invisible to readers (a later physical purge is a
     * rewrite — out of scope here, as in Delta's own DROP COLUMN). */
   def dropColumn(spark: SparkSession, table: String, name: String): Long = {
-    val fs = hadoopFs(spark, table)
-    val v = latestVersion(spark, table) + 1
-    require(v > 0, s"$table has no Delta log")
-    val snapD = snapshot(spark, table, v - 1)
+    val latest = latestVersion(spark, table)
+    require(latest >= 0, s"$table has no Delta log")
+    val snapD = snapshot(spark, table, latest)
     val (id, _) = snapD.meta.getOrElse(
       throw new IllegalArgumentException(s"no metaData in $table log"))
     val schema = tableSchema(spark, table)
@@ -1786,14 +1777,13 @@ object DeltaLite {
     require(schema.fieldNames.contains(name), s"no column $name in $table")
     require(schema.fields.length > 1, s"cannot drop the last column of $table")
     val dropped = StructType(schema.fields.filterNot(_.name == name))
-    if (!tryCommit(fs, table, v, Seq(commitInfoLine("DROP COLUMNS"),
-        metaDataLine(dropped, id,
-          // floor keeps maxColumnId at the PRE-drop high-water mark: the
-          // dropped field's id must never be handed to a later ADD COLUMNS
-          configuration = cmConfiguration(dropped, cmMode(snapD.config),
-            floor = cmMaxId(schema, snapD.config))))))
-      throw new IllegalStateException(s"drop lost the commit race on $table")
-    v
+    commitPinned(spark, table, latest, "DROP COLUMNS", Seq(
+      commitInfoLine("DROP COLUMNS"),
+      metaDataLine(dropped, id,
+        // floor keeps maxColumnId at the PRE-drop high-water mark: the
+        // dropped field's id must never be handed to a later ADD COLUMNS
+        configuration = cmConfiguration(dropped, cmMode(snapD.config),
+          floor = cmMaxId(schema, snapD.config)))))
   }
 
   /** METADATA-ONLY widening — SQL `ALTER TABLE ADD COLUMNS`'s landing
@@ -1807,10 +1797,9 @@ object DeltaLite {
     * ICT flags) is RE-DECLARED, never reset. */
   def addColumn(spark: SparkSession, table: String, name: String,
       dataType: org.apache.spark.sql.types.DataType): Long = {
-    val fs = hadoopFs(spark, table)
-    val v = latestVersion(spark, table) + 1
-    require(v > 0, s"$table has no Delta log")
-    val snapA = snapshot(spark, table, v - 1)
+    val latest = latestVersion(spark, table)
+    require(latest >= 0, s"$table has no Delta log")
+    val snapA = snapshot(spark, table, latest)
     val (id, _) = snapA.meta.getOrElse(
       throw new IllegalArgumentException(s"no metaData in $table log"))
     val schema = tableSchema(spark, table)
@@ -1824,11 +1813,9 @@ object DeltaLite {
         (w, snapA.config ++ cmConfiguration(w, cmMode(snapA.config),
           floor = maxId))
       } else (StructType(schema.fields :+ nf), snapA.config)
-    if (!tryCommit(fs, table, v, Seq(commitInfoLine("ADD COLUMNS"),
-        metaDataLine(widened, id, snapA.partCols, conf))))
-      throw new IllegalStateException(
-        s"add column lost the commit race on $table")
-    v
+    commitPinned(spark, table, latest, "ADD COLUMNS", Seq(
+      commitInfoLine("ADD COLUMNS"),
+      metaDataLine(widened, id, snapA.partCols, conf)))
   }
 
   /** Add a CHECK constraint (PROTOCOL.md §CHECK Constraints) as a
@@ -1841,10 +1828,9 @@ object DeltaLite {
   def addConstraint(spark: SparkSession, table: String, name: String,
       expr: String): Long = {
     import org.apache.spark.sql.functions.{expr => e_, not}
-    val fs = hadoopFs(spark, table)
-    val v = latestVersion(spark, table) + 1
-    require(v > 0, s"$table has no Delta log")
-    val snapC = snapshot(spark, table, v - 1)
+    val latest = latestVersion(spark, table)
+    require(latest >= 0, s"$table has no Delta log")
+    val snapC = snapshot(spark, table, latest)
     val (id, _) = snapC.meta.getOrElse(
       throw new IllegalArgumentException(s"no metaData in $table log"))
     val schema = tableSchema(spark, table)
@@ -1857,11 +1843,10 @@ object DeltaLite {
       p.put("minReaderVersion", 1)
       p.put("minWriterVersion", 3) // CHECK constraints' writer requirement
     }
-    if (!tryCommit(fs, table, v, Seq(commitInfoLine("ADD CONSTRAINT"), proto,
-        metaDataLine(schema, id, partitionColumns = snapC.partCols,
-          configuration = conf))))
-      throw new IllegalStateException(s"addConstraint lost the race on $table")
-    v
+    commitPinned(spark, table, latest, "ADD CONSTRAINT", Seq(
+      commitInfoLine("ADD CONSTRAINT"), proto,
+      metaDataLine(schema, id, partitionColumns = snapC.partCols,
+        configuration = conf)))
   }
 
   /** The table's CHECK constraints, `delta.constraints.<name>` → expr —
@@ -1898,20 +1883,16 @@ object DeltaLite {
     * through snapshots and checkpoints like constraints do. Metadata-only
     * commit. */
   def setAppendOnly(spark: SparkSession, table: String): Long = {
-    val fs = hadoopFs(spark, table)
     val latest = latestVersion(spark, table)
     require(latest >= 0, s"$table has no Delta log")
     val snap = snapshot(spark, table, latest)
     val (id, _) = snap.meta.getOrElse(
       throw new IllegalArgumentException(s"no metaData in $table log"))
-    val v = latest + 1
-    if (!tryCommit(fs, table, v, Seq(commitInfoLine("SET TBLPROPERTIES"),
-        metaDataLine(tableSchema(spark, table), id,
-          partitionColumns = snap.partCols,
-          configuration = snap.config + ("delta.appendOnly" -> "true")))))
-      throw new IllegalStateException(
-        s"setAppendOnly lost the commit race on $table")
-    v
+    commitPinned(spark, table, latest, "SET TBLPROPERTIES", Seq(
+      commitInfoLine("SET TBLPROPERTIES"),
+      metaDataLine(tableSchema(spark, table), id,
+        partitionColumns = snap.partCols,
+        configuration = snap.config + ("delta.appendOnly" -> "true"))))
   }
 
   /** Write-time enforcement of `delta.appendOnly`: called by every op
@@ -1977,7 +1958,6 @@ object DeltaLite {
   def addGeneratedColumn(spark: SparkSession, table: String, column: String,
       exprSql: String): Long = {
     import org.apache.spark.sql.functions.{col, expr, not}
-    val fs = hadoopFs(spark, table)
     requireNotMapped(spark, table, "addGeneratedColumn()")
     val latest = latestVersion(spark, table)
     require(latest >= 0, s"$table has no Delta log")
@@ -2007,14 +1987,10 @@ object DeltaLite {
         p.put("minReaderVersion", 1)
         p.put("minWriterVersion", math.max(priorWriter, 4))
       })
-    val v = latest + 1
-    if (!tryCommit(fs, table, v,
-        Seq(commitInfoLine("ADD GENERATED COLUMN")) ++ proto ++
-          Seq(metaDataLine(newSchema, id,
-            partitionColumns = snap.partCols, configuration = snap.config))))
-      throw new IllegalStateException(
-        s"addGeneratedColumn lost the commit race on $table")
-    v
+    commitPinned(spark, table, latest, "ADD GENERATED COLUMN",
+      Seq(commitInfoLine("ADD GENERATED COLUMN")) ++ proto ++
+        Seq(metaDataLine(newSchema, id,
+          partitionColumns = snap.partCols, configuration = snap.config)))
   }
 
   /** REORG (physical purge) of a column-mapped table — Delta's
@@ -2052,24 +2028,22 @@ object DeltaLite {
       addLine(s"$staged/${p.getPath.getName}", p.getLen, p.getModificationTime,
         dataChange = false))
     val removes = before.files.map(removeLine(_, dataChange = false))
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("REORG") +: (removes ++ adds)))
-      throw new IllegalStateException(s"purge lost the commit race on $table")
+    commitPinned(spark, table, latest, "REORG",
+      commitInfoLine("REORG") +: (removes ++ adds), staged)
     (v, before.files.size.toLong, parts.length.toLong)
   }
 
   private def writeTagged(spark: SparkSession, dfIn: DataFrame, table: String,
-      overwrite: Boolean, tag: String, maxRetries: Int = 10,
-      collectStats: Boolean = false,
+      overwrite: Boolean, tag: String, collectStats: Boolean = false,
       txn: Option[(String, Long)] = None): Long = {
     val fs = hadoopFs(spark, table)
     requireNotMapped(spark, table, "plain write()") // use writeColumnMapped
     if (overwrite) requireAppendsOnly(spark, table, "overwrite write()")
     val df = applyGenerated(spark, table, dfIn) // compute/validate generated
     enforceConstraints(spark, table, df) // CHECK constraints gate the write
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = latestVersion(spark, table) + 1
+    val op = if (overwrite) "OVERWRITE" else "WRITE"
+    Txn.commit(new Log(fs, table), op) { head =>
+      val v = head + 1
       val token = java.util.UUID.randomUUID().toString.take(8)
       val staged = s"data/v$v$tag$token"
       df.write.mode("errorifexists").parquet(s"$table/$staged")
@@ -2164,14 +2138,10 @@ object DeltaLite {
             case _ => Seq.empty
           }
         }
-      val info = commitInfoLine(if (overwrite) "OVERWRITE" else "WRITE")
       val txns = txn.map { case (app, ver) => txnLine(app, ver) }.toSeq
-      if (tryCommit(fs, table, v,
-          info +: (header ++ txns ++ removes ++ adds))) return v
-      fs.delete(new Path(table, staged), true)
-      attempt += 1
+      Txn.Put(commitInfoLine(op) +: (header ++ txns ++ removes ++ adds), v,
+        Seq(new Path(table, staged)))
     }
-    throw new IllegalStateException(s"commit lost $maxRetries races on $table")
   }
 
   /** Incremental read: the rows ADDED in versions (fromV, toV] — the
@@ -2278,7 +2248,6 @@ object DeltaLite {
   def deleteWhere(spark: SparkSession, table: String, column: String,
       lo: Long, hi: Long): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.{col => c_, not}
-    val fs = hadoopFs(spark, table)
     requireAppendsOnly(spark, table, "deleteWhere()")
     val (affected, _, _) = planSkipping(spark, table, column, lo, hi)
     if (affected.isEmpty) return (latestVersion(spark, table), 0L, 0L)
@@ -2293,7 +2262,8 @@ object DeltaLite {
     val kept = affectedDf.where(not(c_(column).between(lo, hi)))
     val rowsAfter = kept.count()
     // stage replacements (commit-private dir, the writeTagged discipline)
-    val v = latestVersion(spark, table) + 1
+    val pinned = latestVersion(spark, table)
+    val v = pinned + 1
     val token = java.util.UUID.randomUUID().toString.take(8)
     val staged = s"data/v$v-del-$token"
     val adds = stageReplacementAdds(spark, table, kept, staged, column,
@@ -2307,9 +2277,9 @@ object DeltaLite {
         affectedDf.where(c_(column).between(lo, hi))
           .withColumn("_change_type",
             org.apache.spark.sql.functions.lit("delete")), v, token)
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("DELETE") +: (removes ++ adds ++ cdc)))
-      throw new IllegalStateException(s"delete lost the commit race on $table")
+    commitPinned(spark, table, pinned, "DELETE",
+      commitInfoLine("DELETE") +: (removes ++ adds ++ cdc),
+      staged, s"_change_data/v$v-$token")
     (v, affected.size.toLong, rowsBefore - rowsAfter)
   }
 
@@ -2329,7 +2299,6 @@ object DeltaLite {
   def deletePartition(spark: SparkSession, table: String, partCol: String,
       value: String): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.lit
-    val fs = hadoopFs(spark, table)
     requireNotMapped(spark, table, "deletePartition()")
     requireAppendsOnly(spark, table, "deletePartition()")
     val latest = latestVersion(spark, table)
@@ -2356,10 +2325,8 @@ object DeltaLite {
           partitionValues = Map(partCol -> value))
       }
     val removes = affected.map(removeLine(_))
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("DELETE") +: (removes ++ cdc)))
-      throw new IllegalStateException(
-        s"deletePartition lost the commit race on $table")
+    commitPinned(spark, table, latest, "DELETE",
+      commitInfoLine("DELETE") +: (removes ++ cdc), s"_change_data/v$v-$token")
     (v, affected.size.toLong, rowsDeleted)
   }
 
@@ -2371,7 +2338,6 @@ object DeltaLite {
     * data-sized, as it must be). Returns (version, filesRemoved). */
   def truncate(spark: SparkSession, table: String): (Long, Long) = {
     import org.apache.spark.sql.functions.lit
-    val fs = hadoopFs(spark, table)
     requireAppendsOnly(spark, table, "truncate()")
     val latest = latestVersion(spark, table)
     require(latest >= 0, s"$table has no Delta log")
@@ -2388,10 +2354,9 @@ object DeltaLite {
             snap.files, snap.dvs)
             .withColumn("_change_type", lit("delete")), v, token)
       }
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("TRUNCATE") +: (snap.files.map(removeLine(_)) ++ cdc)))
-      throw new IllegalStateException(
-        s"truncate lost the commit race on $table")
+    commitPinned(spark, table, latest, "TRUNCATE",
+      commitInfoLine("TRUNCATE") +: (snap.files.map(removeLine(_)) ++ cdc),
+      s"_change_data/v$v-$token")
     (v, snap.files.size.toLong)
   }
 
@@ -2511,9 +2476,8 @@ object DeltaLite {
       if (!cdfEnabled(snap.config)) dvProtocolLine
       else protocolLineOf(Protocol(3, 7, Seq("deletionVectors"),
         Seq("deletionVectors", "changeDataFeed")))
-    if (!tryCommit(fs, table, v,
-        Seq(commitInfoLine("DELETE"), protoLine) ++ actions ++ cdc))
-      throw new IllegalStateException(s"DV delete lost the commit race on $table")
+    commitPinned(spark, table, latest, "DELETE",
+      Seq(commitInfoLine("DELETE"), protoLine) ++ actions ++ cdc)
     val deleted = perFile.map { case (_, oldN, union) => union.length - oldN }.sum
     (v, perFile.size.toLong, deleted.toLong)
   }
@@ -2536,8 +2500,8 @@ object DeltaLite {
     * itself so the chain continues ([[stampInCommitTimestamp]]). */
   def shallowClone(spark: SparkSession, src: String, dst: String,
       now: Long = System.currentTimeMillis()): Long = {
-    val fs = hadoopFs(spark, dst)
-    require(latestVersion(spark, dst) < 0, s"$dst already has a Delta log")
+    val dstLatest = latestVersion(spark, dst)
+    require(dstLatest < 0, s"$dst already has a Delta log")
     val srcLatest = latestVersion(spark, src)
     require(srcLatest >= 0, s"$src has no Delta log to clone")
     val snap = snapshot(spark, src, srcLatest)
@@ -2573,9 +2537,7 @@ object DeltaLite {
           stats = snap.stats.get(f),
           partitionValues = snap.pvals.getOrElse(f, Map.empty))
       }
-    if (!tryCommit(fs, dst, 0L, lines))
-      throw new IllegalStateException(s"clone lost the race creating $dst")
-    0L
+    commitPinned(spark, dst, dstLatest, "CLONE", lines)
   }
 
   /** RESTORE to an earlier version as a NEW commit (Delta's own rollback
@@ -2603,11 +2565,8 @@ object DeltaLite {
           dataChange = true, target.pvals.getOrElse(f, Map.empty),
           target.dvs.get(f))
       }
-    val v = latest + 1
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("RESTORE") +: (removes ++ adds)))
-      throw new IllegalStateException(s"restore lost the commit race on $table")
-    v
+    commitPinned(spark, table, latest, "RESTORE",
+      commitInfoLine("RESTORE") +: (removes ++ adds))
   }
 
   /** DESCRIBE HISTORY — one row per retained commit straight off the log
@@ -2786,7 +2745,6 @@ object DeltaLite {
   def setDomainMetadata(spark: SparkSession, table: String, domain: String,
       configuration: String): Long = {
     require(domain.nonEmpty, "domain name must be non-empty")
-    val fs = hadoopFs(spark, table)
     val latest = latestVersion(spark, table)
     require(latest >= 0, s"$table has no Delta log")
     val snap = snapshot(spark, table, latest)
@@ -2796,13 +2754,9 @@ object DeltaLite {
         Seq.empty
       else Seq(protocolLineOf(Protocol(cur.minReader, 7, cur.readerFeatures,
         (cur.writerFeatures :+ "domainMetadata").distinct)))
-    val v = latest + 1
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("SET DOMAIN METADATA") +: protoLines :+
-          domainMetadataLine(domain, configuration, removed = false)))
-      throw new IllegalStateException(
-        s"setDomainMetadata lost the commit race on $table")
-    v
+    commitPinned(spark, table, latest, "SET DOMAIN METADATA",
+      commitInfoLine("SET DOMAIN METADATA") +: protoLines :+
+        domainMetadataLine(domain, configuration, removed = false))
   }
 
   /** Remove a domain: a tombstone action — replay (and the next
@@ -2810,18 +2764,14 @@ object DeltaLite {
     * absent domain rather than committing a no-op tombstone. */
   def removeDomainMetadata(spark: SparkSession, table: String,
       domain: String): Long = {
-    val fs = hadoopFs(spark, table)
     val latest = latestVersion(spark, table)
     require(latest >= 0, s"$table has no Delta log")
     val snap = snapshot(spark, table, latest)
     require(snap.domains.contains(domain),
       s"domain '$domain' not present on $table — nothing to remove")
-    val v = latest + 1
-    if (!tryCommit(fs, table, v, Seq(commitInfoLine("REMOVE DOMAIN METADATA"),
-        domainMetadataLine(domain, "", removed = true))))
-      throw new IllegalStateException(
-        s"removeDomainMetadata lost the commit race on $table")
-    v
+    commitPinned(spark, table, latest, "REMOVE DOMAIN METADATA", Seq(
+      commitInfoLine("REMOVE DOMAIN METADATA"),
+      domainMetadataLine(domain, "", removed = true)))
   }
 
   /** The live domain → configuration map at the latest (or given)
@@ -2849,16 +2799,15 @@ object DeltaLite {
     * monotone guarantee), and raising the protocol to writer 7 with the
     * `inCommitTimestamp` writerFeature (writer-only: old READERS keep
     * working untouched — the stamp lives in commitInfo, which replay
-    * ignores). From this commit on, [[tryCommit]] stamps every commit's
-    * leading commitInfo with a strictly-increasing `inCommitTimestamp`
-    * ([[stampInCommitTimestamp]]); this commit itself carries the first
-    * stamp. Why the feature exists at 100 TB: `TIMESTAMP AS OF` against
+    * ignores). From this commit on, the log serializer ([[Log]]) stamps
+    * every commit's leading commitInfo with a strictly-increasing
+    * `inCommitTimestamp` ([[stampInCommitTimestamp]]); this commit
+    * itself carries the first stamp. Why the feature exists at 100 TB: `TIMESTAMP AS OF` against
     * file-modification times breaks under clock skew, log copy/restore,
     * and metadata cleanup — the timestamp must live IN the commit.
     * `now` is injectable for deterministic tests. Idempotent. */
   def enableInCommitTimestamps(spark: SparkSession, table: String,
       now: Long = System.currentTimeMillis()): Long = {
-    val fs = hadoopFs(spark, table)
     val latest = latestVersion(spark, table)
     require(latest >= 0, s"$table has no Delta log")
     val snap = snapshot(spark, table, latest)
@@ -2870,18 +2819,14 @@ object DeltaLite {
     val upgraded = Protocol(cur.minReader, 7, cur.readerFeatures,
       (cur.writerFeatures :+ "inCommitTimestamp").distinct)
     val schema = DataType.fromJson(sj).asInstanceOf[StructType]
-    val v = latest + 1
-    if (!tryCommit(fs, table, v, Seq(
-        ictCommitInfoLine("SET TBLPROPERTIES", now),
-        protocolLineOf(upgraded),
-        metaDataLine(schema, id, partitionColumns = snap.partCols,
-          configuration = snap.config ++ Map(
-            "delta.enableInCommitTimestamps" -> "true",
-            "delta.inCommitTimestampEnablementVersion" -> v.toString,
-            "delta.inCommitTimestampEnablementTimestamp" -> now.toString)))))
-      throw new IllegalStateException(
-        s"enableInCommitTimestamps lost the commit race on $table")
-    v
+    commitPinned(spark, table, latest, "SET TBLPROPERTIES", Seq(
+      ictCommitInfoLine("SET TBLPROPERTIES", now),
+      protocolLineOf(upgraded),
+      metaDataLine(schema, id, partitionColumns = snap.partCols,
+        configuration = snap.config ++ Map(
+          "delta.enableInCommitTimestamps" -> "true",
+          "delta.inCommitTimestampEnablementVersion" -> (latest + 1).toString,
+          "delta.inCommitTimestampEnablementTimestamp" -> now.toString))))
   }
 
   /** The (version, inCommitTimestamp) ledger of every retained commit
@@ -2918,7 +2863,6 @@ object DeltaLite {
   }
 
   def enableCdf(spark: SparkSession, table: String): Long = {
-    val fs = hadoopFs(spark, table)
     requireNotMapped(spark, table, "enableCdf()")
     val latest = latestVersion(spark, table)
     require(latest >= 0, s"$table has no Delta log")
@@ -2932,14 +2876,11 @@ object DeltaLite {
         cur.copy(writerFeatures = (cur.writerFeatures :+ "changeDataFeed").distinct)
       else cur.copy(minWriter = math.max(cur.minWriter, 4))
     val schema = DataType.fromJson(sj).asInstanceOf[StructType]
-    val v = latest + 1
-    if (!tryCommit(fs, table, v, Seq(
-        commitInfoLine("SET TBLPROPERTIES"),
-        protocolLineOf(upgraded),
-        metaDataLine(schema, id, partitionColumns = snap.partCols,
-          configuration = snap.config + (CdfKey -> "true")))))
-      throw new IllegalStateException(s"enableCdf lost the commit race on $table")
-    v
+    commitPinned(spark, table, latest, "SET TBLPROPERTIES", Seq(
+      commitInfoLine("SET TBLPROPERTIES"),
+      protocolLineOf(upgraded),
+      metaDataLine(schema, id, partitionColumns = snap.partCols,
+        configuration = snap.config + (CdfKey -> "true"))))
   }
 
   /** Stage `df` (table columns + `_change_type`) as this commit's change
@@ -3075,7 +3016,6 @@ object DeltaLite {
       lo: Long, hi: Long,
       set: Map[String, org.apache.spark.sql.Column]): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.{col => c_, lit, not}
-    val fs = hadoopFs(spark, table)
     requireNotMapped(spark, table, "updateWhere()")
     requireAppendsOnly(spark, table, "updateWhere()")
     val latest = latestVersion(spark, table)
@@ -3117,9 +3057,9 @@ object DeltaLite {
         matched.withColumn("_change_type", lit("update_preimage"))
           .unionByName(updated.withColumn("_change_type",
             lit("update_postimage"))), v, token)
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("UPDATE") +: (removes ++ adds ++ cdc)))
-      throw new IllegalStateException(s"update lost the commit race on $table")
+    commitPinned(spark, table, latest, "UPDATE",
+      commitInfoLine("UPDATE") +: (removes ++ adds ++ cdc),
+      staged, s"_change_data/v$v-$token")
     (v, affected.size.toLong, rowsUpdated)
   }
 
@@ -3182,7 +3122,6 @@ object DeltaLite {
       removeRel: Seq[String], addRel: Seq[String],
       operation: String,
       partitionValues: Map[String, Map[String, String]] = Map.empty,
-      maxRetries: Int = 10,
       pinnedDvs: Option[Map[String, DeletionVectors.Descriptor]] = None)
       : Long = {
     val fs = hadoopFs(spark, table)
@@ -3193,48 +3132,37 @@ object DeltaLite {
         statsByFile.get(new Path(f).getName),
         partitionValues = partitionValues.getOrElse(f, Map.empty))
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = latestVersion(spark, table) + 1
-      // OPTIMISTIC CONFLICT RESOLUTION (Delta's own rule): the rewrite
-      // may commit at the head ONLY if every file it removes is still
-      // live there — a concurrent APPEND commutes with this rewrite; a
-      // concurrent commit that touched our files does not, and
-      // committing anyway would silently drop its effects. Checked on
-      // EVERY attempt, not just retries (X304): the hazard window is
-      // pin-to-commit — a compaction landing between the row-level
-      // scan's snapshot pin and this commit would otherwise be clobbered
-      // on a FIRST-attempt CAS that sees the compacted head as prev
-      // (removes match nothing, adds duplicate the rewritten rows).
-      locally {
-        val prev = snapshot(spark, table, v - 1)
-        val live = prev.files.toSet
-        require(removeRel.forall(live.contains),
-          s"$operation on $table conflicts with a concurrent commit " +
-            "that rewrote the same files — re-run the statement against " +
-            "the new snapshot")
-        // Liveness alone is BLIND to a concurrent deleteWhereDV: a DV
-        // commit removes+re-adds the same path (the path stays live),
-        // but this rewrite was staged from the OLDER mask, so committing
-        // would resurrect the concurrently DV-deleted rows. The pin is
-        // the Delta twin of Iceberg's pinnedDeleteFiles check (X300):
-        // refuse when any removed file's DV descriptor changed since the
-        // row-level snapshot was taken.
-        pinnedDvs.foreach { pin =>
-          require(removeRel.forall(f => prev.dvs.get(f) == pin.get(f)),
-            s"$operation on $table conflicts with a concurrent " +
-              "deletion-vector commit on the same files — re-run the " +
-              "statement against the new snapshot")
-        }
-      }
-      if (tryCommit(fs, table, v,
-          commitInfoLine(operation) +:
-            (removeRel.map(removeLine(_)) ++ adds)))
-        return v
-      attempt += 1
+    // OPTIMISTIC CONFLICT RESOLUTION (Delta's own rule): the rewrite may
+    // commit at the head ONLY if every file it removes is still live
+    // there — a concurrent APPEND commutes with this rewrite; a
+    // concurrent commit that touched our files does not, and committing
+    // anyway would silently drop its effects. [[Txn]] runs the check
+    // against each attempt's own head, the first included (X304): the
+    // hazard window is pin-to-commit — a compaction landing between the
+    // row-level scan's snapshot pin and this commit would otherwise be
+    // clobbered on a first-attempt CAS that sees the compacted head as
+    // prev (removes match nothing, adds duplicate the rewritten rows).
+    val conflict = Txn.Check { head =>
+      val prev = snapshot(spark, table, head)
+      val live = prev.files.toSet
+      if (!removeRel.forall(live.contains))
+        Some("it rewrote the same files")
+      // Liveness alone is BLIND to a concurrent deleteWhereDV: a DV
+      // commit removes+re-adds the same path (the path stays live), but
+      // this rewrite was staged from the OLDER mask, so committing would
+      // resurrect the concurrently DV-deleted rows. The pin is the Delta
+      // twin of Iceberg's pinnedDeleteFiles check (X300): refuse when any
+      // removed file's DV descriptor changed since the row-level
+      // snapshot was taken.
+      else if (pinnedDvs.exists(pin =>
+          !removeRel.forall(f => prev.dvs.get(f) == pin.get(f))))
+        Some("a deletion-vector commit touched the same files")
+      else None
     }
-    throw new IllegalStateException(
-      s"$operation lost $maxRetries commit races on $table")
+    Txn.commit(new Log(fs, table), operation, conflict) { head =>
+      Txn.Put(commitInfoLine(operation) +:
+        (removeRel.map(removeLine(_)) ++ adds), head + 1)
+    }
   }
 
   /** Exactly-once STREAMING epoch commit for the SQL
@@ -3254,18 +3182,16 @@ object DeltaLite {
   private[graft] def commitStreamFiles(spark: SparkSession, table: String,
       addRel: Seq[String], epochId: Long,
       appId: String = TxnAppId,
-      partitionValues: Map[String, Map[String, String]] = Map.empty,
-      maxRetries: Int = 10): Long = {
+      partitionValues: Map[String, Map[String, String]] = Map.empty)
+      : Long = {
     val fs = hadoopFs(spark, table)
-    var statsByFile: Map[String, String] = null
-    var attempt = 0
+    lazy val statsByFile = longStatsFor(spark, table, addRel)
     // OPTIMISTIC RETRY: two streaming queries (or a query and a batch
     // writer) legitimately race one table; an epoch append conflicts
     // with nothing, so losing the arbiter race just means re-reading
     // the head — the per-appId ledger check re-runs each attempt so a
     // replay that lands concurrently still no-ops.
-    while (attempt < maxRetries) {
-      val latest = latestVersion(spark, table)
+    Txn.commit(new Log(fs, table), "STREAMING UPDATE") { latest =>
       require(latest >= 0,
         s"$table has no Delta log — CREATE TABLE through the catalog first")
       val snapS = snapshot(spark, table, latest)
@@ -3276,24 +3202,20 @@ object DeltaLite {
           addRel.forall(partitionValues.contains),
         s"$table is partitioned: streaming adds must declare " +
           "partitionValues")
-      if (snapS.txns.get(appId).exists(_ >= epochId)) return latest
-      if (addRel.isEmpty) return latest // empty epoch: nothing to dedup
-      if (statsByFile == null) statsByFile = longStatsFor(spark, table,
-        addRel)
-      val adds = addRel.map { f =>
-        val st = fs.getFileStatus(new Path(table, f))
-        addLine(f, st.getLen, st.getModificationTime,
-          statsByFile.get(new Path(f).getName),
-          partitionValues = partitionValues.getOrElse(f, Map.empty))
+      // a replayed epoch, or an empty one (nothing to dedup), no-ops
+      if (snapS.txns.get(appId).exists(_ >= epochId) || addRel.isEmpty)
+        Txn.Done(latest)
+      else {
+        val adds = addRel.map { f =>
+          val st = fs.getFileStatus(new Path(table, f))
+          addLine(f, st.getLen, st.getModificationTime,
+            statsByFile.get(new Path(f).getName),
+            partitionValues = partitionValues.getOrElse(f, Map.empty))
+        }
+        Txn.Put(Seq(commitInfoLine("STREAMING UPDATE"),
+          txnLine(appId, epochId)) ++ adds, latest + 1)
       }
-      if (tryCommit(fs, table, latest + 1,
-          Seq(commitInfoLine("STREAMING UPDATE"),
-            txnLine(appId, epochId)) ++ adds))
-        return latest + 1
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"streaming epoch $epochId lost $maxRetries commit races on $table")
   }
 
   /** numRecords + long-column min/max stats for staged files, computed
@@ -3378,7 +3300,6 @@ object DeltaLite {
       deleteWhen: Option[org.apache.spark.sql.Column] = None)
       : (Long, Long, Long, Long) = {
     import org.apache.spark.sql.functions.{coalesce, col => c_, collect_set, count => cnt_, countDistinct, lit, max => mx_, min => mn_, not, sum => sum_, when}
-    val fs = hadoopFs(spark, table)
     requireNotMapped(spark, table, "mergeInto()")
     requireAppendsOnly(spark, table, "mergeInto()")
     val latest = latestVersion(spark, table)
@@ -3485,10 +3406,9 @@ object DeltaLite {
             pre.unionByName(post).unionByName(dels).unionByName(ins),
             v, token)
         }
-      if (!tryCommit(fs, table, v,
-          commitInfoLine("MERGE") +: (removes ++ adds ++ cdc)))
-        throw new IllegalStateException(
-          s"merge lost the commit race on $table")
+      commitPinned(spark, table, latest, "MERGE",
+        commitInfoLine("MERGE") +: (removes ++ adds ++ cdc),
+        staged, s"_change_data/v$v-$token")
       (v, rowsUpdated, deletedKeys, rowsInserted)
     } finally src.unpersist()
   }

@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter, SeekableByteArrayInput}
@@ -23,9 +23,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructType}
   *
   *   - `metadata/v<N>.metadata.json` — table metadata (Jackson): schema
   *     with Iceberg field ids, snapshot list, current snapshot pointer;
-  *     a new metadata version is claimed by ATOMIC CREATE (the
-  *     [[CommitLog.tryCommit]] arbiter — Iceberg's HadoopCatalog commits
-  *     exactly this way, via rename-if-absent).
+  *     a new metadata version is claimed by ATOMIC CREATE through
+  *     [[Txn]], the optimistic-commit loop shared with [[DeltaLite]] and
+  *     [[CommitLog]] (Iceberg's HadoopCatalog commits exactly this way,
+  *     via rename-if-absent).
   *   - `metadata/snap-<id>.avro` — the snapshot's MANIFEST LIST (bundled
   *     Avro; spec field-ids 500-503 carried as `field-id` schema props):
   *     one row per manifest, so a reader plans a snapshot from one small
@@ -46,7 +47,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructType}
   * and [[rewriteDataFiles]] materializes deletes away.
   * Conformance subset (documented, not hidden): required fields only, no
   * metrics maps / split offsets / puffin DVs; `version-hint.text` is
-  * maintained best-effort (the spec itself marks it advisory — the
+  * refreshed by every commit (the spec itself marks it advisory — the
   * authoritative pointer is the highest committed metadata version).
   *
   * Scale shape: all three metadata layers are control-plane (small files,
@@ -427,8 +428,10 @@ object IcebergLite {
         s"type ${other.simpleString} outside the IcebergLite subset")
     }
 
-  def latestMetadataVersion(spark: SparkSession, table: String): Int = {
-    val fs = hadoopFs(spark, table)
+  def latestMetadataVersion(spark: SparkSession, table: String): Int =
+    latestMetadataVersion(hadoopFs(spark, table), table)
+
+  private def latestMetadataVersion(fs: FileSystem, table: String): Int = {
     val dir = metaDir(table)
     if (!fs.exists(dir)) 0
     else fs.listStatus(dir).map(_.getPath.getName)
@@ -445,6 +448,40 @@ object IcebergLite {
     val in = fs.open(metaFile(table, v))
     try mapper.readTree(in) finally in.close()
   }
+
+  /** The metadata log for [[Txn]]: version N is `v<N>.metadata.json`, the
+    * whole table metadata (its manifest list and manifests are written by
+    * the attempt first). Every claimed version refreshes the advisory
+    * `version-hint.text` (spec: best-effort) — data and metadata-only
+    * commits alike. */
+  private[sources] class Log(fs: FileSystem, table: String)
+      extends Txn.Log[JsonNode](fs, table) {
+    def head(): Long = latestMetadataVersion(fs, table)
+    def versionFile(v: Long): Path = metaFile(table, v.toInt)
+    def encode(v: Long, meta: JsonNode): Array[Byte] =
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(meta)
+        .getBytes(StandardCharsets.UTF_8)
+    override def published(v: Long): Unit = {
+      val hint = fs.create(new Path(metaDir(table), "version-hint.text"), true)
+      try hint.write(v.toString.getBytes(StandardCharsets.UTF_8))
+      finally hint.close()
+    }
+  }
+
+  private[sources] def txnLog(spark: SparkSession, table: String): Log =
+    new Log(hadoopFs(spark, table), table)
+
+  /** One attempt of a snapshot-producing commit: its new metadata. */
+  private type Attempt[R] = Txn.Attempt[JsonNode, R]
+
+  /** A METADATA-ONLY commit: `meta` (the head's metadata, edited) as the
+    * version after `pinned` — any commit after `pinned` conflicts.
+    * Returns the new metadata version. */
+  private def commitMetadataOnly(fs: FileSystem, table: String, pinned: Int,
+      operation: String, meta: JsonNode): Int =
+    Txn.commit(new Log(fs, table), operation, Txn.PinnedAt(pinned)) { _ =>
+      Txn.Put(meta, pinned + 1)
+    }
 
   private def writeAvroFile(path: File, schema: Schema,
       records: Seq[GenericRecord]): Long = {
@@ -491,19 +528,17 @@ object IcebergLite {
   def createTable(spark: SparkSession, table: String, schema: StructType,
       partitionField: Option[PartField] = None): Long = {
     val fs = hadoopFs(spark, table)
-    require(latestMetadataVersion(spark, table) == 0,
+    require(latestMetadataVersion(fs, table) == 0,
       s"$table already has Iceberg metadata — CREATE TABLE refuses to clobber")
     fs.mkdirs(metaDir(table))
     val token = java.util.UUID.randomUUID().toString.take(8)
     val listName = s"snap-1-$token.avro"
     writeManifestList(table, listName, Seq.empty, v2 = false)
-    if (!commitMetadataJson(fs, table, 0, None, 1, 1L, schema,
-        partitionField, listName, "append", Map.empty)) {
-      fs.delete(new Path(metaDir(table), listName), false)
-      throw new IllegalStateException(
-        s"CREATE TABLE lost the commit race on $table")
+    Txn.commit(new Log(fs, table), "CREATE TABLE", Txn.PinnedAt(0)) { _ =>
+      Txn.Put(snapshotMetadata(table, None, 1, 1L, schema, partitionField,
+        listName, "append", Map.empty), 1L,
+        Seq(new Path(metaDir(table), listName)))
     }
-    1L
   }
 
   def write(spark: SparkSession, df: DataFrame, table: String,
@@ -511,13 +546,13 @@ object IcebergLite {
       partitionField: Option[PartField] = None,
       summaryProps: Map[String, String] = Map.empty,
       boundsColumn: Option[String] = None,
-      maxRetries: Int = 10,
       operation: Option[String] = None,
       formatV2: Boolean = false,
       toBranch: Option[String] = None,
       statsColumns: Seq[String] = Nil,
       timestampMs: Long = 0L,
       requireSourceSnapshot: Option[Long] = None): Long = {
+    val fs = hadoopFs(spark, table)
     // optimistic-concurrency retry (Iceberg's own commit model): a lost
     // metadata-version race cleans up this attempt's commit-private
     // artifacts (staged data, manifest, manifest list) and replans from
@@ -525,32 +560,43 @@ object IcebergLite {
     // EXCEPT when the caller staged a REPLACEMENT of a specific source
     // snapshot (requireSourceSnapshot, X304 — rewriteDataFiles): a
     // retried overwrite would re-commit rows staged from the OLD head
-    // and silently undo whatever the race winner wrote; the per-attempt
-    // check below refuses loudly instead.
-    var attempt = 0
-    while (attempt < maxRetries) {
-      writeOnce(spark, df, table, overwrite, partitionField,
-        summaryProps, boundsColumn, operation, formatV2, toBranch,
-        statsColumns, timestampMs, requireSourceSnapshot) match {
-        case Some(snapshotId) => return snapshotId
-        case None => attempt += 1
+    // and silently undo whatever the race winner wrote — the replacement
+    // commits only while that snapshot is still the head.
+    val rule = requireSourceSnapshot.fold[Txn.Rule](Txn.Commutes) { src =>
+      Txn.Check { head =>
+        val cur =
+          if (head > 0)
+            readMetadata(fs, table, head.toInt).get("current-snapshot-id")
+              .asLong()
+          else -1L
+        if (cur == src) None
+        else Some(s"staged from snapshot $src but the head is now $cur")
       }
     }
-    throw new IllegalStateException(
-      s"commit lost $maxRetries metadata races on $table")
+    Txn.commit(new Log(fs, table),
+      operation.getOrElse(if (overwrite) "overwrite" else "append"), rule) {
+      head =>
+        writeAttempt(spark, df, table, head.toInt, overwrite, partitionField,
+          summaryProps, boundsColumn, operation, formatV2, toBranch,
+          statsColumns, timestampMs)
+    }
   }
 
-  private def writeOnce(spark: SparkSession, df: DataFrame, table: String,
+  /** One [[write]] attempt against metadata version `prevV`: stage the
+    * data files, their manifest and the manifest list, and return the
+    * new metadata. */
+  private def writeAttempt(spark: SparkSession, df: DataFrame, table: String,
+      prevV: Int,
       overwrite: Boolean,
       partitionField: Option[PartField],
       summaryProps: Map[String, String],
       boundsColumn: Option[String],
-      operation: Option[String] = None,
-      formatV2: Boolean = false,
+      operation: Option[String],
+      formatV2: Boolean,
       toBranch: Option[String] = None,
       statsColumns: Seq[String] = Nil,
-      timestampMs: Long = 0L,
-      requireSourceSnapshot: Option[Long] = None): Option[Long] = {
+      timestampMs: Long = 0L)
+      : Txn.Put[JsonNode, Long] = {
     require(boundsColumn.isEmpty || statsColumns.isEmpty,
       "boundsColumn (legacy long bounds) and statsColumns (spec " +
         "column-stats maps) are mutually exclusive")
@@ -558,27 +604,11 @@ object IcebergLite {
       s"stats column $c absent from the schema"))
     val fs = hadoopFs(spark, table)
     fs.mkdirs(metaDir(table))
-    val prevV = latestMetadataVersion(spark, table)
     if (prevV > 0) {
       val priorSpec = partitionSpec(readMetadata(fs, table, prevV))
       require(priorSpec == partitionField,
         s"partition spec mismatch on $table: table has $priorSpec, " +
           s"commit declares $partitionField")
-    }
-    // a REPLACEMENT pinned to a source snapshot commits only while that
-    // snapshot is still the head (X304): a concurrent commit's rows
-    // must never be undone by stale staged data. The arbiter CAS below
-    // makes the check-commit pair atomic — a commit sneaking in after
-    // this check loses us the CAS, and the retry re-checks.
-    requireSourceSnapshot.foreach { srcSnap =>
-      val cur =
-        if (prevV > 0)
-          readMetadata(fs, table, prevV).get("current-snapshot-id").asLong()
-        else -1L
-      require(cur == srcSnap,
-        s"replace on $table conflicts with a concurrent commit: staged " +
-          s"from snapshot $srcSnap but the head is now $cur — re-run " +
-          "against the new snapshot")
     }
     val snapshotId = prevV + 1L
     // stage data files (commit-private dir, the DeltaLite discipline)
@@ -824,33 +854,25 @@ object IcebergLite {
       prior :+ MEntry(s"$table/metadata/$manifestName", manifestLen,
         snapshotId, content = 0, seq = snapshotId, specId = defaultSpecId),
       v2 = formatVersion >= 2)
-    val committed = commitMetadataJson(fs, table, prevV, prevMeta,
-      formatVersion, snapshotId, df.schema, partitionField, listName,
-      operation.getOrElse(if (overwrite) "overwrite" else "append"),
-      summaryProps, toBranch, timestampMs)
-    if (!committed) {
-      // lost the race: remove THIS attempt's commit-private artifacts
-      // (nothing references them) and let the caller replan
-      fs.delete(new Path(table, staged), true)
-      fs.delete(new Path(metaDir(table), manifestName), false)
-      fs.delete(new Path(metaDir(table), listName), false)
-      return None
-    }
-    Some(snapshotId)
+    Txn.Put(snapshotMetadata(table, prevMeta, formatVersion, snapshotId,
+        df.schema, partitionField, listName,
+        operation.getOrElse(if (overwrite) "overwrite" else "append"),
+        summaryProps, toBranch, timestampMs),
+      snapshotId,
+      Seq(new Path(table, staged), new Path(metaDir(table), manifestName),
+        new Path(metaDir(table), listName)))
   }
 
-  /** Build the new table-metadata JSON (prior snapshots + this one) and
-    * claim the next metadata version by ATOMIC CREATE. Shared by every
-    * commit shape — data appends/overwrites ([[writeOnce]]) and
-    * position-delete commits ([[deleteWhere]]). Returns false when the
-    * version was lost to a racing writer (caller cleans up its own
-    * commit-private artifacts and replans). */
-  private def commitMetadataJson(fs: FileSystem, table: String, prevV: Int,
+  /** The new table-metadata JSON (prior snapshots + this one) — what every
+    * snapshot-producing commit shape hands [[Txn]] as its actions: data
+    * appends/overwrites ([[writeAttempt]]), delete and update commits,
+    * replacements and stream epochs. */
+  private def snapshotMetadata(table: String,
       prevMeta: Option[com.fasterxml.jackson.databind.JsonNode],
       formatVersion: Int, snapshotId: Long, dfSchema: StructType,
       partitionField: Option[PartField], listName: String,
       operation: String, summaryProps: Map[String, String],
-      toBranch: Option[String] = None, timestampMs: Long = 0L): Boolean = {
+      toBranch: Option[String] = None, timestampMs: Long = 0L): JsonNode = {
     // the snapshot this commit planned against — main's head, or the
     // branch head for a branch-targeted commit (spec: parent-snapshot-id;
     // fastForward walks it to prove ancestry before publishing)
@@ -1018,16 +1040,7 @@ object IcebergLite {
     }
     root.putArray("snapshot-log")
     root.putArray("metadata-log")
-    val committed = AtomicCreate.create(fs, metaFile(table, prevV + 1),
-      mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsString(root).getBytes(StandardCharsets.UTF_8))
-    if (committed) {
-      // advisory pointer (spec: best-effort)
-      val hint = fs.create(new Path(metaDir(table), "version-hint.text"), true)
-      try hint.write(s"${prevV + 1}".getBytes(StandardCharsets.UTF_8))
-      finally hint.close()
-    }
-    committed
+    root
   }
 
   /** The ledger name for batch-side [[commitIdempotent]] sinks and the
@@ -1106,12 +1119,7 @@ object IcebergLite {
     val r = refs.putObject(name)
     r.put("snapshot-id", snapshotId)
     r.put("type", refType)
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(meta).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"setRef lost the commit race for metadata v${v + 1} on $table")
-    v + 1
+    commitMetadataOnly(fs, table, v, "setRef", meta)
   }
 
   /** ROLLBACK to a retained snapshot (Iceberg's `rollback_to_snapshot`
@@ -1141,12 +1149,7 @@ object IcebergLite {
     val main = copy.`with`("refs").putObject("main")
     main.put("snapshot-id", snapshotId)
     main.put("type", "branch")
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"rollbackTo lost the commit race for metadata v${v + 1} on $table")
-    v + 1
+    commitMetadataOnly(fs, table, v, "rollbackTo", copy)
   }
 
   /** Delete a named ref (metadata-only); its snapshot becomes an ordinary
@@ -1160,12 +1163,7 @@ object IcebergLite {
       .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
     require(meta.path("refs").has(name), s"no ref $name on $table")
     meta.`with`("refs").remove(name)
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(meta).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"dropRef lost the commit race for metadata v${v + 1} on $table")
-    v + 1
+    commitMetadataOnly(fs, table, v, "dropRef", meta)
   }
 
   /** METADATA-ONLY schema evolution — SQL `ALTER TABLE ADD COLUMNS`'s
@@ -1267,12 +1265,7 @@ object IcebergLite {
     }
     copy.put("current-schema-id", sid)
     copy.put("last-column-id", math.max(lastCol, evolved.map(_._1).max))
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"$op lost the commit race for metadata v${v + 1} on $table")
-    v + 1
+    commitMetadataOnly(fs, table, v, op, copy)
   }
 
   /** PARTITION SPEC EVOLUTION (spec §Partition Evolution) — the hidden-
@@ -1316,12 +1309,7 @@ object IcebergLite {
     copy.put("default-spec-id", newId)
     if (newSpec.isDefined)
       copy.put("last-partition-id", copy.path("last-partition-id").asInt(999) + 1)
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"evolvePartitionSpec lost the commit race for v${v + 1} on $table")
-    v + 1
+    commitMetadataOnly(fs, table, v, "evolvePartitionSpec", copy)
   }
 
   /** Declare the table's SORT ORDER (spec §Sort Orders): a METADATA-ONLY
@@ -1362,12 +1350,7 @@ object IcebergLite {
     f.put("direction", "asc")
     f.put("null-order", "nulls-first")
     copy.put("default-sort-order-id", newId)
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"setSortOrder lost the commit race for v${v + 1} on $table")
-    v + 1
+    commitMetadataOnly(fs, table, v, "setSortOrder", copy)
   }
 
   /** TABLE STATISTICS in a PUFFIN file (spec §Table Statistics +
@@ -1463,12 +1446,7 @@ object IcebergLite {
       }
     }
     copy.set[com.fasterxml.jackson.databind.node.ObjectNode]("statistics", stats)
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"writeStatistics lost the commit race for v${v + 1} on $table")
-    v + 1
+    commitMetadataOnly(fs, table, v, "writeStatistics", copy)
   }
 
   /** Re-anchor the table's statistics at the CURRENT snapshot (X303):
@@ -1653,12 +1631,7 @@ object IcebergLite {
     val mainRef = copy.`with`("refs").putObject("main")
     mainRef.put("snapshot-id", head)
     mainRef.put("type", "branch")
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"fastForward lost the commit race for v${v + 1} on $table")
-    v + 1
+    commitMetadataOnly(fs, table, v, "fastForward", copy)
   }
 
   /** Resolve a named ref (branch or tag) to its snapshot id — the SQL
@@ -1745,12 +1718,7 @@ object IcebergLite {
       }
     val newSnaps = meta.putArray("snapshots")
     retained.foreach(newSnaps.add)
-    val committed = AtomicCreate.create(fs, metaFile(table, v + 1),
-      mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsString(meta).getBytes(StandardCharsets.UTF_8))
-    if (!committed)
-      throw new IllegalStateException(
-        s"lost the commit race for metadata v${v + 1} on $table")
+    commitMetadataOnly(fs, table, v, "expireSnapshots", meta)
     // referenced closure of the retained snapshots: lists → manifests → files
     val refLists = retained.map(s =>
       new Path(s.get("manifest-list").asText()).getName).toSet
@@ -3376,17 +3344,10 @@ object IcebergLite {
     * (the scan is merge-on-read), so re-deleting is a counted no-op.
     * Returns (snapshotId, rowsDeleted); no commit when nothing matches. */
   def deleteWhere(spark: SparkSession, table: String, column: String,
-      lo: Long, hi: Long, maxRetries: Int = 10): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      deleteOnce(spark, table, column, lo, hi) match {
-        case Some(r) => return r
-        case None => attempt += 1
-      }
+      lo: Long, hi: Long): (Long, Long) =
+    Txn.commit(txnLog(spark, table), "delete") { head =>
+      deleteAttempt(spark, table, column, lo, hi, head.toInt)
     }
-    throw new IllegalStateException(
-      s"delete lost $maxRetries metadata races on $table")
-  }
 
   /** One DELETE-manifest entry of the given kind (1 = position deletes,
     * 2 = equality deletes). */
@@ -3487,10 +3448,10 @@ object IcebergLite {
     * snapshot survive — exactly the upsert semantics Flink/Iceberg CDC
     * writers rely on. Returns (snapshotId, valuesWritten). */
   def deleteWhereEquality(spark: SparkSession, table: String, column: String,
-      values: Seq[Long], maxRetries: Int = 10): (Long, Long) = {
+      values: Seq[Long]): (Long, Long) = {
     import spark.implicits._
     deleteWhereEqualityRows(spark, table,
-      values.distinct.sorted.toDF(column), maxRetries)
+      values.distinct.sorted.toDF(column))
   }
 
   /** [[deleteWhereEquality]] for COMPOSITE keys (X305) — the delete
@@ -3508,22 +3469,14 @@ object IcebergLite {
     * key columns; exotic types refuse loudly, and only when a plan
     * actually needs that file). */
   def deleteWhereEqualityRows(spark: SparkSession, table: String,
-      keys: DataFrame, maxRetries: Int = 10): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      equalityDeleteOnce(spark, table, keys) match {
-        case Some(r) => return r
-        case None => attempt += 1
-      }
+      keys: DataFrame): (Long, Long) =
+    Txn.commit(txnLog(spark, table), "equality delete") { head =>
+      equalityDeleteAttempt(spark, table, keys, head.toInt)
     }
-    throw new IllegalStateException(
-      s"equality delete lost $maxRetries metadata races on $table")
-  }
 
-  private def equalityDeleteOnce(spark: SparkSession, table: String,
-      keys: DataFrame): Option[(Long, Long)] = {
+  private def equalityDeleteAttempt(spark: SparkSession, table: String,
+      keys: DataFrame, prevV: Int): Attempt[(Long, Long)] = {
     val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
     require(prevV > 0, s"$table has no Iceberg metadata")
     val prevMeta = readMetadata(fs, table, prevV)
     val cur = prevMeta.get("current-snapshot-id").asLong()
@@ -3558,16 +3511,13 @@ object IcebergLite {
       prior :+ MEntry(s"$table/metadata/$manifestName", manifestLen,
         snapshotId, content = 1, seq = snapshotId),
       v2 = true)
-    val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
-      formatVersion = math.max(2,
-        prevMeta.path("format-version").asInt(1)), snapshotId, schema,
-      partitionSpec(prevMeta), listName, "delete", Map.empty)
-    if (!committed) {
-      fs.delete(new Path(table, staged), true)
-      fs.delete(new Path(metaDir(table), manifestName), false)
-      fs.delete(new Path(metaDir(table), listName), false)
-      None
-    } else Some((snapshotId, nTuples))
+    Txn.Put(snapshotMetadata(table, Some(prevMeta),
+        formatVersion = math.max(2,
+          prevMeta.path("format-version").asInt(1)), snapshotId, schema,
+        partitionSpec(prevMeta), listName, "delete", Map.empty),
+      (snapshotId, nTuples),
+      Seq(new Path(table, staged), new Path(metaDir(table), manifestName),
+        new Path(metaDir(table), listName)))
   }
 
   /** TRUNCATE — a `delete` snapshot whose manifest list is EMPTY:
@@ -3575,32 +3525,29 @@ object IcebergLite {
     * preserved (earlier snapshots still time-travel; expiration
     * reclaims their files), and the next append starts a fresh live
     * set. Returns (snapshotId, filesRemoved). */
-  def truncate(spark: SparkSession, table: String,
-      maxRetries: Int = 10): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val fs = hadoopFs(spark, table)
-      val prevV = latestMetadataVersion(spark, table)
+  def truncate(spark: SparkSession, table: String): (Long, Long) = {
+    val fs = hadoopFs(spark, table)
+    Txn.commit(new Log(fs, table), "truncate") { head =>
+      val prevV = head.toInt
       require(prevV > 0, s"$table has no Iceberg metadata")
       val prevMeta = readMetadata(fs, table, prevV)
       val cur = prevMeta.get("current-snapshot-id").asLong()
       val nFiles = snapshotFiles(spark, table, cur, metaV = prevV).size
-      if (nFiles == 0) return (cur, 0L)
-      val snapshotId = prevV + 1L
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val listName = s"snap-$snapshotId-$token.avro"
-      writeManifestList(table, listName, Seq.empty,
-        v2 = prevMeta.path("format-version").asInt(1) >= 2)
-      if (commitMetadataJson(fs, table, prevV, Some(prevMeta),
-          prevMeta.path("format-version").asInt(1), snapshotId,
-          currentSchema(prevMeta), partitionSpec(prevMeta), listName,
-          "delete", Map.empty))
-        return (snapshotId, nFiles.toLong)
-      fs.delete(new Path(metaDir(table), listName), false)
-      attempt += 1
+      if (nFiles == 0) Txn.Done((cur, 0L))
+      else {
+        val snapshotId = prevV + 1L
+        val token = java.util.UUID.randomUUID().toString.take(8)
+        val listName = s"snap-$snapshotId-$token.avro"
+        writeManifestList(table, listName, Seq.empty,
+          v2 = prevMeta.path("format-version").asInt(1) >= 2)
+        Txn.Put(snapshotMetadata(table, Some(prevMeta),
+            prevMeta.path("format-version").asInt(1), snapshotId,
+            currentSchema(prevMeta), partitionSpec(prevMeta), listName,
+            "delete", Map.empty),
+          (snapshotId, nFiles.toLong),
+          Seq(new Path(metaDir(table), listName)))
+      }
     }
-    throw new IllegalStateException(
-      s"truncate lost $maxRetries commit races on $table")
   }
 
   /** STICKY-UPWARD format-version upgrade (metadata-only commit; the
@@ -3620,12 +3567,7 @@ object IcebergLite {
     if (!copy.has("last-sequence-number"))
       copy.put("last-sequence-number",
         meta.get("current-snapshot-id").asLong().max(0L))
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"upgradeFormatVersion lost the commit race on $table")
-    v + 1
+    commitMetadataOnly(fs, table, v, "upgradeFormatVersion", copy)
   }
 
   /** Live v3 DELETION-VECTOR entries of a snapshot: (puffin path,
@@ -3697,23 +3639,15 @@ object IcebergLite {
     * format-version 3 ([[upgradeFormatVersion]]); rewriteDataFiles
     * materializes vectors away. Returns (snapshotId, newlyMasked). */
   def deleteWhereDV(spark: SparkSession, table: String, column: String,
-      lo: Long, hi: Long, maxRetries: Int = 10): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      deleteDvOnce(spark, table, column, lo, hi) match {
-        case Some(r) => return r
-        case None => attempt += 1
-      }
+      lo: Long, hi: Long): (Long, Long) =
+    Txn.commit(txnLog(spark, table), "DV delete") { head =>
+      deleteDvAttempt(spark, table, column, lo, hi, head.toInt)
     }
-    throw new IllegalStateException(
-      s"DV delete lost $maxRetries metadata races on $table")
-  }
 
-  private def deleteDvOnce(spark: SparkSession, table: String,
-      column: String, lo: Long, hi: Long): Option[(Long, Long)] = {
+  private def deleteDvAttempt(spark: SparkSession, table: String,
+      column: String, lo: Long, hi: Long, prevV: Int): Attempt[(Long, Long)] = {
     import org.apache.spark.sql.functions.col
     val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
     require(prevV > 0, s"$table has no Iceberg metadata")
     val prevMeta = readMetadata(fs, table, prevV)
     require(prevMeta.path("format-version").asInt(1) >= 3,
@@ -3745,7 +3679,7 @@ object IcebergLite {
         .map { case (fn, rows) =>
           fn -> (rows.map(_.getLong(1)), rows.head.getString(2)) }
     })
-    if (matched.isEmpty) return Some((cur, 0L))
+    if (matched.isEmpty) return Txn.Done((cur, 0L))
     val nNew = matched.values.map(_._1.length.toLong).sum
     // the SUPERSET contract: the file's new vector = prior vector ∪
     // still-applicable parquet position-delete rows ∪ new matches
@@ -3838,24 +3772,20 @@ object IcebergLite {
         snapshotId, content = 1, seq = snapshotId,
         specId = prevMeta.path("default-spec-id").asInt(0)),
       v2 = true)
-    val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
-      formatVersion = prevMeta.path("format-version").asInt(1), snapshotId,
-      currentSchema(prevMeta), partitionSpec(prevMeta), listName,
-      "delete", Map.empty)
-    if (!committed) {
-      fs.delete(new Path(table, rel), false)
-      fs.delete(new Path(metaDir(table), manifestName), false)
-      fs.delete(new Path(metaDir(table), listName), false)
-      None
-    } else Some((snapshotId, nNew))
+    Txn.Put(snapshotMetadata(table, Some(prevMeta),
+        formatVersion = prevMeta.path("format-version").asInt(1), snapshotId,
+        currentSchema(prevMeta), partitionSpec(prevMeta), listName,
+        "delete", Map.empty),
+      (snapshotId, nNew),
+      Seq(new Path(table, rel), new Path(metaDir(table), manifestName),
+        new Path(metaDir(table), listName)))
   }
 
-  private def deleteOnce(spark: SparkSession, table: String, column: String,
-      lo: Long, hi: Long): Option[(Long, Long)] = {
+  private def deleteAttempt(spark: SparkSession, table: String,
+      column: String, lo: Long, hi: Long, prevV: Int): Attempt[(Long, Long)] = {
     import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
     val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
     require(prevV > 0, s"$table has no Iceberg metadata")
     val prevMeta = readMetadata(fs, table, prevV)
     val spec = partitionSpec(prevMeta)
@@ -3890,7 +3820,7 @@ object IcebergLite {
       staged, snapshotId, spec.isDefined)
     if (nDeleted == 0) {
       fs.delete(new Path(table, staged), true)
-      return Some((cur, 0L))
+      return Txn.Done((cur, 0L))
     }
     val manifestName = s"$snapshotId-$token-del-m0.avro"
     val manifestLen = writeAvroFile(
@@ -3908,16 +3838,14 @@ object IcebergLite {
       prior :+ MEntry(s"$table/metadata/$manifestName", manifestLen,
         snapshotId, content = 1, seq = snapshotId, specId = defaultSpecId),
       v2 = true)
-    val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
-      formatVersion = math.max(2,
-        prevMeta.path("format-version").asInt(1)), snapshotId, currentSchema(prevMeta),
-      partitionSpec(prevMeta), listName, "delete", Map.empty)
-    if (!committed) {
-      fs.delete(new Path(table, staged), true)
-      fs.delete(new Path(metaDir(table), manifestName), false)
-      fs.delete(new Path(metaDir(table), listName), false)
-      None
-    } else Some((snapshotId, nDeleted))
+    Txn.Put(snapshotMetadata(table, Some(prevMeta),
+        formatVersion = math.max(2,
+          prevMeta.path("format-version").asInt(1)), snapshotId,
+        currentSchema(prevMeta), partitionSpec(prevMeta), listName,
+        "delete", Map.empty),
+      (snapshotId, nDeleted),
+      Seq(new Path(table, staged), new Path(metaDir(table), manifestName),
+        new Path(metaDir(table), listName)))
   }
 
   /** Row-level UPDATE as a MERGE-ON-READ commit — ONE snapshot carrying
@@ -3939,26 +3867,19 @@ object IcebergLite {
     * first; this surface folds it into the operation).
     * Returns (snapshotId, rowsUpdated); nothing matched → no commit. */
   def updateWhere(spark: SparkSession, table: String, column: String,
-      lo: Long, hi: Long, set: Map[String, org.apache.spark.sql.Column],
-      maxRetries: Int = 10): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      updateOnce(spark, table, column, lo, hi, set) match {
-        case Some(r) => return r
-        case None => attempt += 1
-      }
-    }
-    throw new IllegalStateException(
-      s"update lost $maxRetries metadata races on $table")
-  }
-
-  private def updateOnce(spark: SparkSession, table: String, column: String,
       lo: Long, hi: Long, set: Map[String, org.apache.spark.sql.Column])
-      : Option[(Long, Long)] = {
+      : (Long, Long) =
+    Txn.commit(txnLog(spark, table), "update") { head =>
+      updateAttempt(spark, table, column, lo, hi, set, head.toInt)
+    }
+
+  private def updateAttempt(spark: SparkSession, table: String,
+      column: String, lo: Long, hi: Long,
+      set: Map[String, org.apache.spark.sql.Column], prevV: Int)
+      : Attempt[(Long, Long)] = {
     import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
     val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
     require(prevV > 0, s"$table has no Iceberg metadata")
     val prevMeta = readMetadata(fs, table, prevV)
     val spec = partitionSpec(prevMeta)
@@ -3981,7 +3902,7 @@ object IcebergLite {
       .persist()
     try {
       val rowsUpdated = matched.count()
-      if (rowsUpdated == 0) return Some((cur, 0L))
+      if (rowsUpdated == 0) return Txn.Done((cur, 0L))
       val token = java.util.UUID.randomUUID().toString.take(8)
       // (1) matched rows' old coordinates → position-delete file(s);
       // per-partition with the value on each entry when the table is
@@ -4046,18 +3967,15 @@ object IcebergLite {
             snapshotId, content = 1, seq = snapshotId,
             specId = defaultSpecId)),
         v2 = true)
-      val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
-        formatVersion = math.max(2,
-        prevMeta.path("format-version").asInt(1)), snapshotId, schema, spec, listName,
-        "overwrite", Map.empty)
-      if (!committed) {
-        fs.delete(new Path(table, stagedDel), true)
-        fs.delete(new Path(table, stagedData), true)
-        fs.delete(new Path(metaDir(table), delManifestName), false)
-        fs.delete(new Path(metaDir(table), dataManifestName), false)
-        fs.delete(new Path(metaDir(table), listName), false)
-        None
-      } else Some((snapshotId, rowsUpdated))
+      Txn.Put(snapshotMetadata(table, Some(prevMeta),
+          formatVersion = math.max(2,
+            prevMeta.path("format-version").asInt(1)), snapshotId, schema,
+          spec, listName, "overwrite", Map.empty),
+        (snapshotId, rowsUpdated),
+        Seq(new Path(table, stagedDel), new Path(table, stagedData),
+          new Path(metaDir(table), delManifestName),
+          new Path(metaDir(table), dataManifestName),
+          new Path(metaDir(table), listName)))
     } finally matched.unpersist()
   }
 
@@ -4161,23 +4079,16 @@ object IcebergLite {
     * matches nothing degrades to a plain append commit. Returns
     * (snapshotId, rowsUpdated, rowsInserted). */
   def mergeInto(spark: SparkSession, table: String, source: DataFrame,
-      keyCol: String, maxRetries: Int = 10): (Long, Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      mergeOnce(spark, table, source, keyCol) match {
-        case Some(r) => return r
-        case None => attempt += 1
-      }
+      keyCol: String): (Long, Long, Long) =
+    Txn.commit(txnLog(spark, table), "merge") { head =>
+      mergeAttempt(spark, table, source, keyCol, head.toInt)
     }
-    throw new IllegalStateException(
-      s"merge lost $maxRetries metadata races on $table")
-  }
 
-  private def mergeOnce(spark: SparkSession, table: String,
-      source: DataFrame, keyCol: String): Option[(Long, Long, Long)] = {
+  private def mergeAttempt(spark: SparkSession, table: String,
+      source: DataFrame, keyCol: String, prevV: Int)
+      : Attempt[(Long, Long, Long)] = {
     import org.apache.spark.sql.functions.{col, collect_set, count => cnt, lit => lt}
     val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
     require(prevV > 0, s"$table has no Iceberg metadata")
     val prevMeta = readMetadata(fs, table, prevV)
     require(partitionSpec(prevMeta).isEmpty,
@@ -4219,9 +4130,10 @@ object IcebergLite {
       val rowsInserted = nSrc - matchedKeys
       if (touched.isEmpty) {
         // nothing matched: a plain append commit of the source
-        return writeOnce(spark, src, table, overwrite = false, None,
-          Map.empty, None, Some("append"), formatV2 = formatVersion >= 2)
-          .map(sid => (sid, 0L, rowsInserted))
+        val put = writeAttempt(spark, src, table, prevV, overwrite = false,
+          None, Map.empty, None, Some("append"),
+          formatV2 = formatVersion >= 2)
+        return put.copy(result = (put.result, 0L, rowsInserted))
       }
       val snapshotId = prevV + 1L
       val token = java.util.UUID.randomUUID().toString.take(8)
@@ -4238,52 +4150,23 @@ object IcebergLite {
         .write.mode("errorifexists").parquet(s"$table/$stagedData")
       val (dataManifestName, dataManifestLen) =
         stageDataManifest(spark, fs, table, stagedData, snapshotId, token)
-      // survivor manifests: untouched → by reference; partially touched →
-      // re-written with surviving entries under the ORIGINAL sequence;
-      // fully touched → dropped. Delete manifests carry by reference
-      // (their rows for rewritten files are inert — the file is gone).
-      val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
-      val written = mutable.ArrayBuffer.empty[String]
-      var mIdx = 0
-      val carried = listEntries(fs, new Path(curList)).flatMap { me =>
-        if (me.content != 0) Some(me)
-        else {
-          val records = readAvroFile(fs, new Path(me.path))
-          val (dropped, kept) = records.partition { r =>
-            r.get("status").asInstanceOf[Int] != 2 &&
-              touched.contains(fileKeyRaw(
-                r.get("data_file").asInstanceOf[GenericRecord]
-                  .get("file_path").toString))
-          }
-          if (dropped.isEmpty) Some(me)
-          else if (kept.isEmpty) None
-          else {
-            mIdx += 1
-            val name = s"$snapshotId-$token-surv$mIdx.avro"
-            val len = writeAvroFile(
-              new File(new File(table, "metadata"), name),
-              kept.head.getSchema, kept)
-            written += name
-            Some(MEntry(s"$table/metadata/$name", len, me.addedSid,
-              content = 0, seq = me.seq, specId = me.specId))
-          }
-        }
-      }
+      // delete manifests carry by reference (their rows for rewritten
+      // files are inert — the file is gone)
+      val (carried, written) =
+        carrySurvivors(fs, table, prevMeta, snapshotId, token)(_ => r =>
+          touched.contains(fileKeyRaw(r.get("data_file")
+            .asInstanceOf[GenericRecord].get("file_path").toString)))
       val listName = s"snap-$snapshotId-$token.avro"
       writeManifestList(table, listName,
         carried :+ MEntry(s"$table/metadata/$dataManifestName",
           dataManifestLen, snapshotId, content = 0, seq = snapshotId),
         v2 = formatVersion >= 2)
-      val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
-        formatVersion, snapshotId, schema, None, listName,
-        "overwrite", Map.empty)
-      if (!committed) {
-        fs.delete(new Path(table, stagedData), true)
-        written.foreach(n => fs.delete(new Path(metaDir(table), n), false))
-        fs.delete(new Path(metaDir(table), dataManifestName), false)
-        fs.delete(new Path(metaDir(table), listName), false)
-        None
-      } else Some((snapshotId, rowsUpdated, rowsInserted))
+      Txn.Put(snapshotMetadata(table, Some(prevMeta), formatVersion,
+          snapshotId, schema, None, listName, "overwrite", Map.empty),
+        (snapshotId, rowsUpdated, rowsInserted),
+        new Path(table, stagedData) +:
+          (written :+ dataManifestName :+ listName)
+            .map(n => new Path(metaDir(table), n)))
     } finally src.unpersist()
   }
 
@@ -4457,99 +4340,77 @@ object IcebergLite {
       removePaths: Seq[String], addRel: Seq[String],
       operation: String,
       partitionValues: Map[String, String] = Map.empty,
-      maxRetries: Int = 10,
       pinnedDeleteFiles: Option[Set[String]] = None): Long = {
     // OPTIMISTIC CONFLICT RESOLUTION: the rewrite may commit against the
     // head ONLY while every file it removes is still live there (a
     // concurrent APPEND commutes; a concurrent rewrite of our files does
-    // not — the liveness require below surfaces that loudly instead of
-    // dropping its effects). Checked on EVERY attempt, not just retries
-    // (X304): the hazard window is pin-to-commit — a compaction landing
-    // between the row-level snapshot pin and this commit would
-    // otherwise be clobbered on a first-attempt CAS that sees the
-    // compacted head as prev (removes match nothing, adds duplicate the
-    // rewritten rows).
-    var attempt = 0
-    var last: IllegalStateException = null
-    while (attempt < maxRetries) {
-      // Pin the metadata version the checks run against BEFORE any of
-      // them read the head. The commit below refuses (→ retry, → fresh
-      // checks) if the head is no longer this version: without the pin,
-      // a commit landing between these checks and the version read
-      // inside commitReplaceFilesOnce is INVISIBLE — the checks
-      // validated the old head, the CAS targets a version nobody else
-      // wants, and a racing compaction's re-staged pre-update rows get
-      // carried right past the liveness require (the
-      // SqlConcurrencyProperties UPDATE-vs-OPTIMIZE falsification).
-      val pinnedV = latestMetadataVersion(spark, table)
-      locally {
-        val live = snapshotFiles(spark, table, -1L).map(fileKeyRaw).toSet
-        require(removePaths.map(fileKeyRaw).forall(live.contains),
-          s"$operation on $table conflicts with a concurrent commit " +
-            "that rewrote the same files — re-run the statement against " +
-            "the new snapshot")
-      }
-      // MERGE-ON-READ conflict rule (X300, checked EVERY attempt — the
-      // hazard is the pin-to-commit window, not just a lost CAS): the
-      // rewrite re-staged its files' rows from the PINNED delete state,
-      // so a delete file that landed since then and touches those rows
-      // would be silently undone. A fresh POSITION delete conflicts iff
-      // it references a file this commit removes; a fresh EQUALITY
-      // delete always conflicts (its values may match re-staged rows —
-      // the new data files' higher sequence would exempt them from a
-      // delete that serialized first). Fresh deletes on untouched files
+    // not — refused loudly instead of dropping its effects). [[Txn]]
+    // runs the check against each attempt's own head, the first
+    // included (X304): the hazard window is pin-to-commit — a
+    // compaction landing between the row-level snapshot pin and this
+    // commit would otherwise be clobbered on a first-attempt CAS that
+    // sees the compacted head as prev (removes match nothing, adds
+    // duplicate the rewritten rows), and checks that read a LATER head
+    // than the commit stacks on let a racing compaction's re-staged
+    // pre-update rows slip past (the SqlConcurrencyProperties
+    // UPDATE-vs-OPTIMIZE falsification).
+    val removedKeys = removePaths.map(fileKeyRaw).toSet
+    val conflict = Txn.Check { head =>
+      val live = snapshotFiles(spark, table, -1L, metaV = head.toInt)
+        .map(fileKeyRaw).toSet
+      // MERGE-ON-READ conflict rule (X300): the rewrite re-staged its
+      // files' rows from the PINNED delete state, so a delete file that
+      // landed since then and touches those rows would be silently
+      // undone. A fresh POSITION delete conflicts iff it references a
+      // file this commit removes; a fresh EQUALITY delete or v3 deletion
+      // vector always conflicts (equality values may match re-staged
+      // rows — the new data files' higher sequence would exempt them
+      // from a delete that serialized first; a vector was staged from a
+      // mask the rewrite lacks). Fresh deletes on untouched files
       // commute: their manifests are carried and keep applying.
-      pinnedDeleteFiles.foreach { pinned =>
-        val fresh = snapshotDeleteEntries(spark, table, -1L)
-          .filterNot(e => pinned.contains(e._1))
-        if (fresh.nonEmpty) {
-          require(fresh.forall(_._3 != 2),
-            s"$operation on $table conflicts with a concurrent equality " +
-              "delete — re-run the statement against the new snapshot")
-          // a concurrent v3 deletion vector always conflicts (the
-          // rewrite was staged from the pinned mask, which lacks it)
-          require(fresh.forall(_._3 != 3),
-            s"$operation on $table conflicts with a concurrent deletion-" +
-              "vector commit — re-run the statement against the new " +
-              "snapshot")
-          val removedKeys = removePaths.map(fileKeyRaw).toSet
-          val touched = spark.read.parquet(fresh.map(_._1): _*)
-            .select("file_path").collect()
-            .map(r => fileKeyRaw(r.getString(0))).toSet
-          require(touched.intersect(removedKeys).isEmpty,
-            s"$operation on $table conflicts with a concurrent position " +
-              "delete on a file it rewrites — re-run the statement " +
-              "against the new snapshot")
-        }
-      }
-      try return commitReplaceFilesOnce(spark, table, removePaths, addRel,
-        operation, partitionValues, expectedPrevV = pinnedV)
-      catch {
-        case e: IllegalStateException =>
-          last = e
-          attempt += 1
-      }
+      lazy val fresh = pinnedDeleteFiles.toSeq.flatMap(pinned =>
+        snapshotDeleteEntries(spark, table, -1L, metaV = head.toInt)
+          .filterNot(e => pinned.contains(e._1)))
+      if (!removedKeys.forall(live.contains))
+        Some("it rewrote the same files")
+      else if (fresh.exists(_._3 == 2)) Some("an equality delete")
+      else if (fresh.exists(_._3 == 3)) Some("a deletion-vector commit")
+      else if (fresh.nonEmpty && spark.read.parquet(fresh.map(_._1): _*)
+          .select("file_path").collect()
+          .exists(r => removedKeys.contains(fileKeyRaw(r.getString(0)))))
+        Some("a position delete on a file it rewrites")
+      else None
     }
-    throw new IllegalStateException(
-      s"$operation lost $maxRetries commit races on $table", last)
+    commitReplace(spark, table, removePaths, addRel, operation,
+      partitionValues, conflict)
   }
 
+  /** [[commitReplaceFiles]] without its file conflict checks, pinned to
+    * metadata version `expectedPrevV` (any later commit conflicts; -1 =
+    * unpinned). */
   private[graft] def commitReplaceFilesOnce(spark: SparkSession, table: String,
       removePaths: Seq[String], addRel: Seq[String],
       operation: String,
       partitionValues: Map[String, String],
-      expectedPrevV: Long = -1L): Long = {
+      expectedPrevV: Long = -1L): Long =
+    commitReplace(spark, table, removePaths, addRel, operation,
+      partitionValues,
+      if (expectedPrevV >= 0) Txn.PinnedAt(expectedPrevV) else Txn.Commutes)
+
+  private def commitReplace(spark: SparkSession, table: String,
+      removePaths: Seq[String], addRel: Seq[String], operation: String,
+      partitionValues: Map[String, String], rule: Txn.Rule): Long =
+    Txn.commit(txnLog(spark, table), operation, rule) { head =>
+      replaceAttempt(spark, table, removePaths, addRel, operation,
+        partitionValues, head.toInt)
+    }
+
+  /** One replacement attempt against metadata version `prevV`: manifest
+    * discipline as described on [[commitReplaceFiles]]. */
+  private def replaceAttempt(spark: SparkSession, table: String,
+      removePaths: Seq[String], addRel: Seq[String], operation: String,
+      partitionValues: Map[String, String], prevV: Int): Attempt[Long] = {
     val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
-    // check-to-commit atomicity (see caller): commit ONLY against the
-    // exact version the conflict checks validated — a moved head means
-    // an interleaving commit this attempt never examined. Thrown as the
-    // retry-trigger type, not require(): the caller re-runs its checks
-    // against the new head and decides loudly there.
-    if (expectedPrevV >= 0 && prevV != expectedPrevV)
-      throw new IllegalStateException(
-        s"$operation on $table lost a pin-to-commit race: head moved " +
-          s"v$expectedPrevV → v$prevV between conflict checks and commit")
     require(prevV > 0, s"$table has no Iceberg metadata")
     val prevMeta = readMetadata(fs, table, prevV)
     val pfOpt = partitionSpec(prevMeta)
@@ -4557,7 +4418,6 @@ object IcebergLite {
     require(pfOpt.isEmpty || addRel.forall(partitionValues.contains),
       "partitioned replacement adds must each declare their partition " +
         "value")
-    val cur = prevMeta.get("current-snapshot-id").asLong()
     val schema = currentSchema(prevMeta)
     val formatVersion = prevMeta.path("format-version").asInt(1)
     val snapshotId = prevV + 1L
@@ -4571,55 +4431,27 @@ object IcebergLite {
       else Some(stageDataManifestFiles(spark, fs, table, addRel,
         snapshotId, token,
         values = if (pfOpt.isEmpty) None else Some(partitionValues)))
-    val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
-    val written = mutable.ArrayBuffer.empty[String]
-    var mIdx = 0
-    val carried = listEntries(fs, new Path(curList)).flatMap { me =>
-      if (me.content != 0) Some(me) // delete manifests carried whole:
-        // position rows for REMOVED files are inert (scan planning joins
-        // them against live files only); rows for KEPT files must keep
-        // applying — the rewrite re-staged only the files it removed;
-        // equality deletes keep their sequence, and the staged files'
-        // HIGHER data sequence exempts re-written rows (spec §Scan
-        // Planning: equality applies strictly below its own sequence)
-      else {
-        val records = readAvroFile(fs, new Path(me.path))
-        val (dropped, kept) = records.partition { r =>
-          r.get("status").asInstanceOf[Int] != 2 &&
-            removed.contains(fileKeyRaw(
-              r.get("data_file").asInstanceOf[GenericRecord]
-                .get("file_path").toString))
-        }
-        if (dropped.isEmpty) Some(me)
-        else if (kept.isEmpty) None
-        else {
-          mIdx += 1
-          val name = s"$snapshotId-$token-surv$mIdx.avro"
-          val len = writeAvroFile(
-            new File(new File(table, "metadata"), name),
-            kept.head.getSchema, kept)
-          written += name
-          Some(MEntry(s"$table/metadata/$name", len, me.addedSid,
-            content = 0, seq = me.seq, specId = me.specId))
-        }
-      }
-    }
+    // delete manifests carried whole: position rows for REMOVED files are
+    // inert (scan planning joins them against live files only); rows for
+    // KEPT files must keep applying — the rewrite re-staged only the
+    // files it removed; equality deletes keep their sequence, and the
+    // staged files' HIGHER data sequence exempts re-written rows (spec
+    // §Scan Planning: equality applies strictly below its own sequence)
+    val (carried, written) =
+      carrySurvivors(fs, table, prevMeta, snapshotId, token)(_ => r =>
+        removed.contains(fileKeyRaw(r.get("data_file")
+          .asInstanceOf[GenericRecord].get("file_path").toString)))
     val listName = s"snap-$snapshotId-$token.avro"
     writeManifestList(table, listName,
       carried ++ dataManifest.map { case (n, len) =>
         MEntry(s"$table/metadata/$n", len, snapshotId, content = 0,
           seq = snapshotId, specId = defaultSpecId) },
       v2 = formatVersion >= 2)
-    if (!commitMetadataJson(fs, table, prevV, Some(prevMeta), formatVersion,
-        snapshotId, schema, pfOpt, listName, operation, Map.empty)) {
-      written.foreach(n => fs.delete(new Path(metaDir(table), n), false))
-      dataManifest.foreach { case (n, _) =>
-        fs.delete(new Path(metaDir(table), n), false) }
-      fs.delete(new Path(metaDir(table), listName), false)
-      throw new IllegalStateException(
-        s"$operation lost the commit race on $table")
-    }
-    snapshotId
+    Txn.Put(snapshotMetadata(table, Some(prevMeta), formatVersion,
+        snapshotId, schema, pfOpt, listName, operation, Map.empty),
+      snapshotId,
+      (written ++ dataManifest.map(_._1) :+ listName)
+        .map(n => new Path(metaDir(table), n)))
   }
 
   /** The current snapshot id — the streaming source's offset axis. */
@@ -4715,34 +4547,21 @@ object IcebergLite {
   private[graft] def commitStreamFiles(spark: SparkSession, table: String,
       addRel: Seq[String], epochId: Long,
       appId: String = DefaultLedger,
-      partitionValues: Map[String, String] = Map.empty,
-      maxRetries: Int = 10): Long = {
+      partitionValues: Map[String, String] = Map.empty): Long =
     // OPTIMISTIC RETRY: an epoch append conflicts with nothing, so a
     // lost arbiter race (a concurrent query's epoch, a batch writer)
     // just re-reads the head and re-stages — the per-appId ledger check
     // re-runs each attempt so a concurrently landed replay still no-ops.
-    var attempt = 0
-    var last: IllegalStateException = null
-    while (attempt < maxRetries) {
-      try return commitStreamFilesOnce(spark, table, addRel, epochId,
-        appId, partitionValues)
-      catch {
-        case e: IllegalStateException =>
-          last = e
-          attempt += 1
-      }
+    Txn.commit(txnLog(spark, table), s"streaming epoch $epochId") { head =>
+      streamAttempt(spark, table, addRel, epochId, appId, partitionValues,
+        head.toInt)
     }
-    throw new IllegalStateException(
-      s"streaming epoch $epochId lost $maxRetries commit races on $table",
-      last)
-  }
 
-  private def commitStreamFilesOnce(spark: SparkSession, table: String,
+  private def streamAttempt(spark: SparkSession, table: String,
       addRel: Seq[String], epochId: Long,
       appId: String,
-      partitionValues: Map[String, String]): Long = {
+      partitionValues: Map[String, String], prevV: Int): Attempt[Long] = {
     val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
     require(prevV > 0,
       s"$table has no Iceberg metadata — CREATE TABLE through the " +
         "catalog first")
@@ -4769,9 +4588,9 @@ object IcebergLite {
           found = s.get("snapshot-id").asLong()
       }
     }
-    if (found >= 0) return found
-    if (epochId <= math.max(hwm, maxMarker)) return cur
-    if (addRel.isEmpty) return cur // empty epoch: nothing to dedup
+    if (found >= 0) return Txn.Done(found)
+    if (epochId <= math.max(hwm, maxMarker)) return Txn.Done(cur)
+    if (addRel.isEmpty) return Txn.Done(cur) // empty epoch: nothing to dedup
     // PARTITIONED tables stream too (X295): the rolling streaming
     // writers report each staged file's transform value, recorded as
     // manifest p0 so log-only pruning keeps working on streamed epochs
@@ -4794,16 +4613,11 @@ object IcebergLite {
         content = 0, seq = snapshotId,
         specId = prevMeta.get("default-spec-id").asInt()),
       v2 = formatVersion >= 2)
-    if (!commitMetadataJson(fs, table, prevV, Some(prevMeta), formatVersion,
+    Txn.Put(snapshotMetadata(table, Some(prevMeta), formatVersion,
         snapshotId, schema, None, listName, "append",
-        Map("graft-batch-id" -> epochId.toString,
-          "graft-query-id" -> appId))) {
-      fs.delete(new Path(metaDir(table), mName), false)
-      fs.delete(new Path(metaDir(table), listName), false)
-      throw new IllegalStateException(
-        s"streaming epoch $epochId lost the commit race on $table")
-    }
-    snapshotId
+        Map("graft-batch-id" -> epochId.toString, "graft-query-id" -> appId)),
+      snapshotId,
+      Seq(new Path(metaDir(table), mName), new Path(metaDir(table), listName)))
   }
 
   /** Static partition OVERWRITE (X289) — the Iceberg landing of
@@ -4827,7 +4641,6 @@ object IcebergLite {
       throw new IllegalArgumentException(
         s"$table is not partitioned — INSERT OVERWRITE the whole table"))
     val defaultSpecId = prevMeta.get("default-spec-id").asInt()
-    val cur = prevMeta.get("current-snapshot-id").asLong()
     val schema = currentSchema(prevMeta)
     val formatVersion = prevMeta.path("format-version").asInt(1)
     val stray = df.select(pf.valueColumn(col(pf.source)).as("__pv"))
@@ -4848,57 +4661,70 @@ object IcebergLite {
       .parquet(s"$table/$stagedRel")
     val (mName, mLen) = stageDataManifestPartitioned(spark, fs, table,
       stagedRel, snapshotId, token)
-    val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
-    val written = mutable.ArrayBuffer.empty[String]
-    var mIdx = 0
-    val carried = listEntries(fs, new Path(curList)).flatMap { me =>
-      if (me.content != 0) Some(me)
-      else {
+    val (carried, written) =
+      carrySurvivors(fs, table, prevMeta, snapshotId, token) { me =>
         require(me.specId == defaultSpecId,
           s"manifest ${me.path} was written under spec ${me.specId}, not " +
             s"the default $defaultSpecId — partition-grain overwrite " +
             "needs one spec; rewriteDataFiles first")
-        val records = readAvroFile(fs, new Path(me.path))
-        val (dropped, kept) = records.partition { r =>
-          if (r.get("status").asInstanceOf[Int] == 2) false
-          else {
-            val part = r.get("data_file").asInstanceOf[GenericRecord]
-              .get("partition").asInstanceOf[GenericRecord]
-            val pv =
-              if (part.getSchema.getField("p0") == null) null
-              else Option(part.get("p0")).map(_.toString).orNull
-            pv == value
-          }
-        }
-        if (dropped.isEmpty) Some(me)
-        else if (kept.isEmpty) None
-        else {
-          mIdx += 1
-          val name = s"$snapshotId-$token-surv$mIdx.avro"
-          val len = writeAvroFile(
-            new File(new File(table, "metadata"), name),
-            kept.head.getSchema, kept)
-          written += name
-          Some(MEntry(s"$table/metadata/$name", len, me.addedSid,
-            content = 0, seq = me.seq, specId = me.specId))
+        r => {
+          val part = r.get("data_file").asInstanceOf[GenericRecord]
+            .get("partition").asInstanceOf[GenericRecord]
+          val pv =
+            if (part.getSchema.getField("p0") == null) null
+            else Option(part.get("p0")).map(_.toString).orNull
+          pv == value
         }
       }
-    }
     val listName = s"snap-$snapshotId-$token.avro"
     writeManifestList(table, listName,
       carried :+ MEntry(s"$table/metadata/$mName", mLen, snapshotId,
         content = 0, seq = snapshotId, specId = defaultSpecId),
       v2 = formatVersion >= 2)
-    if (!commitMetadataJson(fs, table, prevV, Some(prevMeta), formatVersion,
-        snapshotId, schema, Some(pf), listName, "overwrite", Map.empty)) {
-      fs.delete(new Path(table, stagedRel), true)
-      written.foreach(n => fs.delete(new Path(metaDir(table), n), false))
-      fs.delete(new Path(metaDir(table), mName), false)
-      fs.delete(new Path(metaDir(table), listName), false)
-      throw new IllegalStateException(
-        s"partition overwrite lost the commit race on $table")
+    Txn.commit(new Log(fs, table), "partition overwrite",
+        Txn.PinnedAt(prevV)) { _ =>
+      Txn.Put(snapshotMetadata(table, Some(prevMeta), formatVersion,
+          snapshotId, schema, Some(pf), listName, "overwrite", Map.empty),
+        snapshotId,
+        new Path(table, stagedRel) +: (written :+ mName :+ listName)
+          .map(n => new Path(metaDir(table), n)))
     }
-    snapshotId
+  }
+
+  /** The head snapshot's manifest list with every live DATA entry that
+    * `drop(manifest)` selects removed — the RewriteFiles shape: untouched
+    * manifests carry by REFERENCE, partially touched ones are re-written
+    * with their surviving entries under the ORIGINAL sequence number,
+    * fully touched ones drop out; delete manifests carry whole. Returns
+    * the carried entries and the names of the re-written manifests. */
+  private def carrySurvivors(fs: FileSystem, table: String,
+      meta: JsonNode, snapshotId: Long, token: String)(
+      drop: MEntry => GenericRecord => Boolean): (Seq[MEntry], Seq[String]) = {
+    val cur = meta.get("current-snapshot-id").asLong()
+    val written = mutable.ArrayBuffer.empty[String]
+    val carried = listEntries(fs,
+        new Path(metaJsonSnapshots(meta).find(_._1 == cur).get._2))
+      .flatMap { me =>
+        if (me.content != 0) Some(me)
+        else {
+          val dropFile = drop(me)
+          val (dropped, kept) = readAvroFile(fs, new Path(me.path))
+            .partition(r => r.get("status").asInstanceOf[Int] != 2 &&
+              dropFile(r))
+          if (dropped.isEmpty) Some(me)
+          else if (kept.isEmpty) None
+          else {
+            val name = s"$snapshotId-$token-surv${written.size + 1}.avro"
+            val len = writeAvroFile(
+              new File(new File(table, "metadata"), name),
+              kept.head.getSchema, kept)
+            written += name
+            Some(MEntry(s"$table/metadata/$name", len, me.addedSid,
+              content = 0, seq = me.seq, specId = me.specId))
+          }
+        }
+      }
+    (carried, written.toSeq)
   }
 
   /** [[stageDataManifest]] over an EXPLICIT file list (table-relative)
@@ -4986,23 +4812,15 @@ object IcebergLite {
     * ONLY: no data file is read or written; operation `replace`, rows
     * unchanged, change feeds silent. Returns
     * (snapshotId, manifestsBefore, manifestsAfter). */
-  def rewriteManifests(spark: SparkSession, table: String,
-      maxRetries: Int = 10): (Long, Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      rewriteManifestsOnce(spark, table) match {
-        case Some(r) => return r
-        case None => attempt += 1
-      }
+  def rewriteManifests(spark: SparkSession, table: String)
+      : (Long, Long, Long) =
+    Txn.commit(txnLog(spark, table), "rewriteManifests") { head =>
+      rewriteManifestsAttempt(spark, table, head.toInt)
     }
-    throw new IllegalStateException(
-      s"rewriteManifests lost $maxRetries commit races on $table")
-  }
 
-  private def rewriteManifestsOnce(spark: SparkSession,
-      table: String): Option[(Long, Long, Long)] = {
+  private def rewriteManifestsAttempt(spark: SparkSession,
+      table: String, prevV: Int): Attempt[(Long, Long, Long)] = {
     val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
     require(prevV > 0, s"$table has no Iceberg metadata")
     val prevMeta = readMetadata(fs, table, prevV)
     val cur = prevMeta.get("current-snapshot-id").asLong()
@@ -5011,7 +4829,7 @@ object IcebergLite {
         s"current snapshot $cur not in $table metadata"))._2
     val all = listEntries(fs, new Path(curList))
     val (dataMans, deleteMans) = all.partition(_.content == 0)
-    if (dataMans.size <= 1) return Some((cur, dataMans.size.toLong,
+    if (dataMans.size <= 1) return Txn.Done((cur, dataMans.size.toLong,
       dataMans.size.toLong))
     val snapshotId = prevV + 1L
     val token = java.util.UUID.randomUUID().toString.take(8)
@@ -5057,14 +4875,12 @@ object IcebergLite {
     val listName = s"snap-$snapshotId-$token.avro"
     writeManifestList(table, listName, rewritten ++ deleteMans,
       v2 = prevMeta.path("format-version").asInt(1) >= 2)
-    if (!commitMetadataJson(fs, table, prevV, Some(prevMeta),
+    Txn.Put(snapshotMetadata(table, Some(prevMeta),
         prevMeta.path("format-version").asInt(1), snapshotId,
         currentSchema(prevMeta), partitionSpec(prevMeta), listName,
-        "replace", Map.empty)) {
-      written.foreach(n => fs.delete(new Path(metaDir(table), n), false))
-      fs.delete(new Path(metaDir(table), listName), false)
-      None
-    } else Some((snapshotId, dataMans.size.toLong, rewritten.size.toLong))
+        "replace", Map.empty),
+      (snapshotId, dataMans.size.toLong, rewritten.size.toLong),
+      (written.toSeq :+ listName).map(n => new Path(metaDir(table), n)))
   }
 
   /** rewriteDataFiles — Iceberg's compaction op ([[DeltaLite.optimize]]'s
